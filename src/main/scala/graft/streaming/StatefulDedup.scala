@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 import graft.functions.TextFunctions
 
@@ -78,14 +78,10 @@ object StatefulDedup {
       outDir: String,
       checkpointDir: String): StreamingQuery = {
     val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = firstSeen(in, idCol, textCol).writeStream
+    StreamingIngest.drain(firstSeen(in, idCol, textCol).writeStream
       .format("parquet")
       .option("path", outDir)
       .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+      .option("checkpointLocation", checkpointDir))
   }
 }

@@ -2,9 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.SystemCols
+import graft.functions.TextFunctions
+import graft.operators.{Baskets, Dedup, Sketches, Temporal}
+import graft.store.VersionedTable
 
 /** Structured-Streaming variants of the ingestion paths (SURVEY.md §2.9:
   * the reference is poll-based incremental batch; Spark's native analogue
@@ -17,28 +21,72 @@ import graft.SystemCols
   * consumers (currentState, restore-pk) cannot tell the paths apart. */
 object StreamingIngest {
 
+  /** The one AvailableNow drain every driver in this package runs: start
+    * the configured sink, process everything currently available,
+    * checkpoint, stop. Returns the finished query. */
+  private[streaming] def drain[T](sink: DataStreamWriter[T]): StreamingQuery = {
+    val q = sink.trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    q
+  }
+
+  /** [[drain]] through `foreachBatch`, which is at-least-once: a batch whose
+    * body committed but whose stream commit never landed re-runs on restart
+    * under the same batchId, and every body must make that replay a no-op. */
+  private def drainBatches(in: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(in.writeStream.foreachBatch(body).option("checkpointLocation", checkpointDir))
+
+  /** [[drainBatches]] over the parquet files under `sourceDir` for a
+    * txn-watermarked maintainer: `body` also gets the maintainer's
+    * [[appIdOf]], the id every one of its commits is watermarked under. */
+  private def drainFolds(spark: SparkSession, sourceDir: String, schema: StructType,
+      entryName: String, checkpointDir: String)(
+      body: (DataFrame, Long, String) => Unit): StreamingQuery = {
+    val appId = appIdOf(entryName, checkpointDir)
+    drainBatches(spark.readStream.schema(schema).parquet(sourceDir), checkpointDir)(
+      body(_, _, appId))
+  }
+
+  /** `<entryName>-<md5 hex of checkpointDir>`: a restart from the same
+    * checkpoint replays uncommitted batches under the SAME batchId, so
+    * (appId, batchId) names each micro-batch across restarts. Persisted as
+    * `graft.txn.<appId>` in every state table — a changed string would
+    * re-apply every batch after an upgrade. */
+  private[graft] def appIdOf(entryName: String, checkpointDir: String): String =
+    entryName + "-" + java.security.MessageDigest.getInstance("MD5")
+      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .map("%02x".format(_)).mkString
+
+  /** The replay guard of the guarded maintainers: true when `t`'s
+    * watermark says the batch already applied, so the FOLD must be skipped,
+    * not just its commit (an additive re-fold double-counts; a refusing
+    * fold trips its own late-data check before any commit could no-op). */
+  private def replayed(t: VersionedTable, appId: String, batchId: Long): Boolean =
+    t.exists && t.txnApplied(appId, batchId)
+
+  /** Materializes one batch output and cuts its lineage. Every output of a
+    * batch goes through here BEFORE any of that batch's commits, which then
+    * land in the maintainer's fixed order: a state derived from the files
+    * it replaces is read before the overwrite, and a fold's refusal raises
+    * inside the batch with nothing committed. */
+  private def truncate(out: DataFrame): DataFrame = out.localCheckpoint(true)
+
   /** Append-only streaming ingest (the append_inserts load mode as a
     * stream): parquet dir → system cols → parquet sink, exactly-once via
     * the checkpoint. Returns the finished query (AvailableNow terminates). */
   def ingestAvailableNow(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       destDir: String,
       checkpointDir: String): StreamingQuery = {
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val out = in
+    val out = spark.readStream.schema(schema).parquet(sourceDir)
       .withColumn(SystemCols.timestamp, current_timestamp())
       .withColumn(SystemCols.isDeleted, lit(false))
       .withColumn(SystemCols.isFullLoad, lit(false))
-    val q = out.writeStream
-      .format("parquet")
-      .option("path", destDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drain(out.writeStream.format("parquet").option("path", destDir)
+      .option("checkpointLocation", checkpointDir))
   }
 
   /** Streaming CDC: each micro-batch runs ONE full SCD2 sync of the
@@ -58,7 +106,7 @@ object StreamingIngest {
   def scd2SyncStream(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       pks: Seq[String],
       destRoot: String,
       checkpointDir: String,
@@ -67,17 +115,10 @@ object StreamingIngest {
     val in = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", filesPerSnapshot.toString)
       .parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val src = new graft.sources.DataFrameSource(batch.localCheckpoint(true), pks)
-        new graft.scd2.Synchronizer(spark, src, destRoot, cfg).execute()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    drainBatches(in, checkpointDir) { (batch, _) =>
+      val src = new graft.sources.DataFrameSource(truncate(batch), pks)
+      new graft.scd2.Synchronizer(spark, src, destRoot, cfg).execute(): Unit
+    }
   }
 
   /** Stream INTO a foreign Delta table exactly-once: `foreachBatch` lands
@@ -96,18 +137,11 @@ object StreamingIngest {
       source: DataFrame,
       tablePath: String,
       appId: String,
-      checkpointDir: String): StreamingQuery = {
-    val q = source.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        new graft.store.ForeignDeltaTable(spark, tablePath)
-          .appendIdempotent(batch.localCheckpoint(true), appId, batchId): Unit
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainBatches(source, checkpointDir) { (batch, batchId) =>
+      new graft.store.ForeignDeltaTable(spark, tablePath)
+        .appendIdempotent(truncate(batch), appId, batchId): Unit
+    }
 
   /** Watermarked tumbling-window aggregation over an event stream — the
     * stateful-op capability probe (counts + sums per window × event_type).
@@ -184,19 +218,11 @@ object StreamingIngest {
   def runWindowedAvailableNow(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       tsCol: String,
       queryName: String): StreamingQuery = {
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val agg = windowedCounts(in, tsCol)
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    val agg = windowedCounts(spark.readStream.schema(schema).parquet(sourceDir), tsCol)
+    drain(agg.writeStream.format("memory").queryName(queryName).outputMode("complete"))
   }
 
   /** Rolling DEDUP ingest — the production streaming shape of
@@ -214,30 +240,14 @@ object StreamingIngest {
   def dedupIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       idCol: String,
       textCol: String,
       destDir: String,
       fpDir: String,
-      checkpointDir: String): StreamingQuery = {
-    // The stream's identity for idempotency is its checkpoint: restarting
-    // from the same checkpoint replays uncommitted batches with the SAME
-    // batchId, so (appId derived from checkpointDir, batchId) uniquely
-    // names each micro-batch across restarts.
-    val appId = "dedupIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dedupIngestBatch(batch, batchId, idCol, textCol, destDir, fpDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "dedupIngest", checkpointDir)(
+      dedupIngestBatch(_, _, idCol, textCol, destDir, fpDir, _))
 
   /** One `dedupIngest` micro-batch — EXACTLY-ONCE under foreachBatch's
     * at-least-once retries. Both sinks are [[graft.store.VersionedTable]]s
@@ -254,15 +264,13 @@ object StreamingIngest {
     * survivors identical (fp store unchanged), dest append no-op, fp
     * append applies — the strandable window heals instead of corrupting. */
   private[graft] def dedupIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       idCol: String,
       textCol: String,
       destDir: String,
       fpDir: String,
       appId: String): Unit = {
-    import graft.functions.TextFunctions
-    import graft.operators.Dedup
     val s = batch.sparkSession
     // within-batch winners: min id per fingerprint
     val winners = batch
@@ -271,15 +279,15 @@ object StreamingIngest {
         org.apache.spark.sql.expressions.Window
           .partitionBy("__fp").orderBy(col(idCol).asc)))
       .filter(col("__rn") === 1).drop("__rn")
-    val fpTable = new graft.store.VersionedTable(s, fpDir)
+    val fpTable = new VersionedTable(s, fpDir)
     val survivors =
       if (fpTable.exists)
         Dedup.exactIncremental(winners.drop("__fp"), idCol, textCol,
           fpTable.read(), strategy = "probe")
       else winners.drop("__fp")
-    val out = survivors.localCheckpoint(true)
+    val out = truncate(survivors)
     Dedup.releaseIntermediates()
-    new graft.store.VersionedTable(s, destDir).appendIdempotent(out, appId, batchId)
+    new VersionedTable(s, destDir).appendIdempotent(out, appId, batchId)
     fpTable.appendIdempotent(
       out.select(TextFunctions.fingerprint(col(textCol)).as("fp")), appId, batchId)
   }
@@ -302,31 +310,18 @@ object StreamingIngest {
   def funnelIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keyCol: String,
       typeCol: String,
       tsCol: String,
       steps: Seq[String],
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "funnelIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        funnelIngestBatch(batch, batchId, keyCol, typeCol, tsCol, steps,
-          stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "funnelIngest", checkpointDir)(
+      funnelIngestBatch(_, _, keyCol, typeCol, tsCol, steps, stateDir, _))
 
   private[graft] def funnelIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       keyCol: String,
       typeCol: String,
@@ -334,22 +329,16 @@ object StreamingIngest {
       steps: Seq[String],
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Temporal
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
     // a replayed batch must skip the FOLD, not just the commit: re-folding
     // against the already-folded state trips the late-data refusal
-    if (tbl.exists && tbl.txnApplied(appId, batchId)) return
-    val ev = batch.select(keyCol, typeCol, tsCol).toDF()
+    if (replayed(tbl, appId, batchId)) return
+    val ev = batch.select(keyCol, typeCol, tsCol)
     val next =
       if (tbl.exists)
         Temporal.funnelFold(tbl.read(), ev, keyCol, typeCol, tsCol, steps)
       else Temporal.funnelState(ev, keyCol, typeCol, tsCol, steps)
-    // the new state derives from the files being replaced: materialize
-    // BEFORE the overwrite commits (snapshot isolation keeps the old files
-    // readable, but eager evaluation also surfaces the fold's late-data
-    // refusal inside THIS batch, before any commit)
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING retention maintenance — the [[funnelIngest]] sibling with a
@@ -367,45 +356,30 @@ object StreamingIngest {
   def retentionIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keyCol: String,
       tsCol: String,
       bucketWidth: Long,
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "retentionIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        retentionIngestBatch(batch, batchId, keyCol, tsCol, bucketWidth,
-          stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "retentionIngest", checkpointDir)(
+      retentionIngestBatch(_, _, keyCol, tsCol, bucketWidth, stateDir, _))
 
   private[graft] def retentionIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       keyCol: String,
       tsCol: String,
       bucketWidth: Long,
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Temporal
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
-    val ev = batch.select(keyCol, tsCol).toDF()
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
+    val ev = batch.select(keyCol, tsCol)
     val delta =
       if (tbl.exists)
         Temporal.retentionFresh(tbl.read(), ev, keyCol, tsCol, bucketWidth)
       else Temporal.retentionState(ev, keyCol, tsCol, bucketWidth)
-    tbl.appendIdempotent(delta.localCheckpoint(true), appId, batchId)
+    tbl.appendIdempotent(truncate(delta), appId, batchId)
   }
 
   /** STREAMING transition-matrix maintenance — the third sibling
@@ -421,29 +395,16 @@ object StreamingIngest {
   def transitionsIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keyCol: String,
       typeCol: String,
       tsCol: String,
       tieBreak: String,
       matrixDir: String,
       frontierDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "transitionsIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        transitionsIngestBatch(batch, batchId, keyCol, typeCol, tsCol, tieBreak,
-          matrixDir, frontierDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "transitionsIngest", checkpointDir)(
+      transitionsIngestBatch(_, _, keyCol, typeCol, tsCol, tieBreak, matrixDir, frontierDir, _))
 
   /** STREAMING sessionization maintenance — the fourth sibling: each
     * micro-batch sessionizes against the persisted per-key frontier
@@ -460,32 +421,19 @@ object StreamingIngest {
   def sessionsIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keyCol: String,
       tsCol: String,
       maxGap: Long,
       tieBreak: String,
       assignDir: String,
       frontierDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "sessionsIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        sessionsIngestBatch(batch, batchId, keyCol, tsCol, maxGap, tieBreak,
-          assignDir, frontierDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "sessionsIngest", checkpointDir)(
+      sessionsIngestBatch(_, _, keyCol, tsCol, maxGap, tieBreak, assignDir, frontierDir, _))
 
   private[graft] def sessionsIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       keyCol: String,
       tsCol: String,
@@ -494,22 +442,17 @@ object StreamingIngest {
       assignDir: String,
       frontierDir: String,
       appId: String): Unit = {
-    import graft.operators.Temporal
     val s = batch.sparkSession
-    val aTbl = new graft.store.VersionedTable(s, assignDir)
-    val fTbl = new graft.store.VersionedTable(s, frontierDir)
+    val aTbl = new VersionedTable(s, assignDir)
+    val fTbl = new VersionedTable(s, frontierDir)
     // fully-applied replay: skip the fold entirely (see scaladoc)
-    if (fTbl.exists && fTbl.txnApplied(appId, batchId)) return
-    val ev = batch.select(keyCol, tsCol, tieBreak).toDF()
+    if (replayed(fTbl, appId, batchId)) return
+    val ev = batch.select(keyCol, tsCol, tieBreak)
     val (assigned, f1) =
       if (fTbl.exists)
         Temporal.sessionizeFold(fTbl.read(), ev, keyCol, tsCol, maxGap, tieBreak)
       else Temporal.sessionizeState(ev, keyCol, tsCol, maxGap, tieBreak)
-    // materialize BOTH before either commit (the frontier derives from the
-    // files being replaced; eager evaluation also surfaces the fold's
-    // strictly-later refusal inside THIS batch)
-    val ac = assigned.localCheckpoint(true)
-    val fc = f1.localCheckpoint(true)
+    val (ac, fc) = (truncate(assigned), truncate(f1))
     aTbl.appendIdempotent(ac, appId, batchId)
     fTbl.overwriteIdempotent(fc, appId, batchId)
   }
@@ -525,45 +468,30 @@ object StreamingIngest {
   def quantilesIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       groupCol: String,
       valueCol: String,
       mantissaBits: Int,
       histDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "quantilesIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        quantilesIngestBatch(batch, batchId, groupCol, valueCol, mantissaBits,
-          histDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "quantilesIngest", checkpointDir)(
+      quantilesIngestBatch(_, _, groupCol, valueCol, mantissaBits, histDir, _))
 
   private[graft] def quantilesIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       groupCol: String,
       valueCol: String,
       mantissaBits: Int,
       histDir: String,
       appId: String): Unit = {
-    import graft.operators.Sketches
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, histDir)
+    val tbl = new VersionedTable(batch.sparkSession, histDir)
     // additive fold: a replayed batch would double-count — skip it
-    if (tbl.exists && tbl.txnApplied(appId, batchId)) return
+    if (replayed(tbl, appId, batchId)) return
     val h = Sketches.quantileSketchHistogram(
-      batch.select(groupCol, valueCol).toDF(), groupCol, valueCol, mantissaBits)
+      batch.select(groupCol, valueCol), groupCol, valueCol, mantissaBits)
     val next = if (tbl.exists) Sketches.quantileSketchFold(tbl.read(), h) else h
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING HLL maintenance — the sixth maintainer, and the only one
@@ -577,31 +505,18 @@ object StreamingIngest {
   def hllIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       groupCol: String,
       hashCol: String,
       p: Int,
       hashBits: Int,
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "hllIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        hllIngestBatch(batch, batchId, groupCol, hashCol, p, hashBits,
-          stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "hllIngest", checkpointDir)(
+      hllIngestBatch(_, _, groupCol, hashCol, p, hashBits, stateDir, _))
 
   private[graft] def hllIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       groupCol: String,
       hashCol: String,
@@ -609,16 +524,14 @@ object StreamingIngest {
       hashBits: Int,
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Sketches
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
     // deliberately NO txnApplied skip: a replayed batch max-folds to the
     // identical registers, and the idempotent commit below no-ops — the
     // fold itself is the exactly-once mechanism
     val bs = Sketches.hllRegisterState(
-      batch.select(groupCol, hashCol).toDF(), groupCol, hashCol, p, hashBits)
+      batch.select(groupCol, hashCol), groupCol, hashCol, p, hashBits)
     val next = if (tbl.exists) Sketches.hllFold(tbl.read(), bs) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING count-min maintenance — the seventh maintainer: each
@@ -632,45 +545,30 @@ object StreamingIngest {
   def countMinIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       hashCol: String,
       depth: Int,
       width: Int,
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "countMinIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        countMinIngestBatch(batch, batchId, hashCol, depth, width,
-          stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "countMinIngest", checkpointDir)(
+      countMinIngestBatch(_, _, hashCol, depth, width, stateDir, _))
 
   private[graft] def countMinIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       hashCol: String,
       depth: Int,
       width: Int,
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Sketches
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
     // additive fold: a replayed batch would double-count — skip it
-    if (tbl.exists && tbl.txnApplied(appId, batchId)) return
-    val bs = Sketches.countMinState(batch.select(hashCol).toDF(),
+    if (replayed(tbl, appId, batchId)) return
+    val bs = Sketches.countMinState(batch.select(hashCol),
       hashCol, depth, width)
     val next = if (tbl.exists) Sketches.countMinFold(tbl.read(), bs) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING KMV maintenance — the eighth maintainer, second of the
@@ -684,43 +582,29 @@ object StreamingIngest {
   def kmvIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       groupCol: String,
       hashCol: String,
       k: Int,
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "kmvIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        kmvIngestBatch(batch, batchId, groupCol, hashCol, k, stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "kmvIngest", checkpointDir)(
+      kmvIngestBatch(_, _, groupCol, hashCol, k, stateDir, _))
 
   private[graft] def kmvIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       groupCol: String,
       hashCol: String,
       k: Int,
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Sketches
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
     // no txnApplied skip: trim-folds are idempotent, replays are harmless
-    val bs = Sketches.kmvState(batch.select(groupCol, hashCol).toDF(),
+    val bs = Sketches.kmvState(batch.select(groupCol, hashCol),
       groupCol, hashCol, k)
     val next = if (tbl.exists) Sketches.kmvFold(tbl.read(), bs, k) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING Bloom-filter maintenance — the tenth maintainer, third of
@@ -734,46 +618,31 @@ object StreamingIngest {
   def bloomIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       hashCol: String,
       numHashes: Int,
       numBits: Int,
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "bloomIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        bloomIngestBatch(batch, batchId, hashCol, numHashes, numBits,
-          stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "bloomIngest", checkpointDir)(
+      bloomIngestBatch(_, _, hashCol, numHashes, numBits, stateDir, _))
 
   private[graft] def bloomIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       hashCol: String,
       numHashes: Int,
       numBits: Int,
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Sketches
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
     // deliberately NO txnApplied skip: a replayed batch OR-folds to the
     // identical words, and the idempotent commit below no-ops — the fold
     // itself is the exactly-once mechanism (the hllIngest rule)
-    val bs = Sketches.bloomState(batch.select(hashCol).toDF(),
+    val bs = Sketches.bloomState(batch.select(hashCol),
       hashCol, numHashes, numBits)
     val next = if (tbl.exists) Sketches.bloomFold(tbl.read(), bs) else bs
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING decayed-counts maintenance — the twelfth maintainer: each
@@ -788,32 +657,19 @@ object StreamingIngest {
   def decayIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keyCol: String,
       tsCol: String,
       bucketWidth: Long,
       decayNum: Int,
       decayDen: Int,
       stateDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "decayIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        decayIngestBatch(batch, batchId, keyCol, tsCol, bucketWidth,
-          decayNum, decayDen, stateDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "decayIngest", checkpointDir)(
+      decayIngestBatch(_, _, keyCol, tsCol, bucketWidth, decayNum, decayDen, stateDir, _))
 
   private[graft] def decayIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       keyCol: String,
       tsCol: String,
@@ -822,15 +678,12 @@ object StreamingIngest {
       decayDen: Int,
       stateDir: String,
       appId: String): Unit = {
-    import graft.operators.Temporal
-    val s = batch.sparkSession
-    val tbl = new graft.store.VersionedTable(s, stateDir)
+    val tbl = new VersionedTable(batch.sparkSession, stateDir)
     // the fold refuses late data, so a replay cannot no-op through it —
     // the txnApplied skip MUST come first (the r15 fold-replay rule)
-    if (tbl.exists && tbl.txnApplied(appId, batchId)) return
+    if (replayed(tbl, appId, batchId)) return
     if (batch.isEmpty) return
-    val b = batch.toDF()
-    val frontier = b.agg(org.apache.spark.sql.functions.max(
+    val frontier = batch.agg(org.apache.spark.sql.functions.max(
         Temporal.floorDiv(tsCol, bucketWidth)))
       .head().getLong(0)
     val next =
@@ -848,11 +701,11 @@ object StreamingIngest {
             s"but the state is stamped width=${m.getLong(Temporal.DecayMetaWidth)} " +
             s"decay=${m.getLong(Temporal.DecayMetaNum)}/${m.getLong(Temporal.DecayMetaDen)} " +
             "— rebuild the state or fix the config")
-        Temporal.decayedCountsFold(state, b, keyCol, tsCol, frontier)
+        Temporal.decayedCountsFold(state, batch, keyCol, tsCol, frontier)
       } else
-        Temporal.decayedCounts(b, keyCol, tsCol, bucketWidth,
+        Temporal.decayedCounts(batch, keyCol, tsCol, bucketWidth,
           decayNum, decayDen, frontier)
-    tbl.overwriteIdempotent(next.localCheckpoint(true), appId, batchId)
+    tbl.overwriteIdempotent(truncate(next), appId, batchId)
   }
 
   /** STREAMING basket-co-occurrence maintenance — the eleventh
@@ -868,32 +721,19 @@ object StreamingIngest {
   def basketsIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       basketCol: String,
       itemCol: String,
       maxBasketSize: Int,
       pairsDir: String,
       itemsDir: String,
       totalsDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "basketsIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        basketsIngestBatch(batch, batchId, basketCol, itemCol, maxBasketSize,
-          pairsDir, itemsDir, totalsDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "basketsIngest", checkpointDir)(
+      basketsIngestBatch(_, _, basketCol, itemCol, maxBasketSize, pairsDir, itemsDir, totalsDir, _))
 
   private[graft] def basketsIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       basketCol: String,
       itemCol: String,
@@ -902,18 +742,17 @@ object StreamingIngest {
       itemsDir: String,
       totalsDir: String,
       appId: String): Unit = {
-    import graft.operators.Baskets
     val s = batch.sparkSession
-    val pTbl = new graft.store.VersionedTable(s, pairsDir)
-    val iTbl = new graft.store.VersionedTable(s, itemsDir)
-    val nTbl = new graft.store.VersionedTable(s, totalsDir)
+    val pTbl = new VersionedTable(s, pairsDir)
+    val iTbl = new VersionedTable(s, itemsDir)
+    val nTbl = new VersionedTable(s, totalsDir)
     // additive folds double-count on replay — skip a fully-applied batch
     // via the LAST-committed table's watermark (pairs); a partial retry
     // re-folds the earlier tables, whose own idempotent commits no-op
-    if (pTbl.exists && pTbl.txnApplied(appId, batchId)) return
+    if (replayed(pTbl, appId, batchId)) return
     if (batch.isEmpty) return
     val (bp, bi, bn) = Baskets.cooccurrenceState(
-      batch.select(basketCol, itemCol).toDF(), basketCol, itemCol, maxBasketSize)
+      batch.select(basketCol, itemCol), basketCol, itemCol, maxBasketSize)
     val (np, ni, nn) =
       if (pTbl.exists && iTbl.exists && nTbl.exists)
         Baskets.cooccurrenceFold(pTbl.read(), iTbl.read(), nTbl.read(), bp, bi, bn)
@@ -922,9 +761,7 @@ object StreamingIngest {
     // rides the PAIRS lineage only, and a deterministic raise after
     // totals/items had committed would leave a state no retry can repair
     // (their idempotent watermarks would forever hide the missing pairs)
-    val npC = np.localCheckpoint(true)
-    val niC = ni.localCheckpoint(true)
-    val nnC = nn.localCheckpoint(true)
+    val (npC, niC, nnC) = (truncate(np), truncate(ni), truncate(nn))
     nTbl.overwriteIdempotent(nnC, appId, batchId)
     iTbl.overwriteIdempotent(niC, appId, batchId)
     pTbl.overwriteIdempotent(npC, appId, batchId)
@@ -944,7 +781,7 @@ object StreamingIngest {
   def gapFillIngest(
       spark: SparkSession,
       sourceDir: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keyCol: String,
       tsCol: String,
       valueCol: String,
@@ -953,25 +790,13 @@ object StreamingIngest {
       mode: String,
       frontierDir: String,
       fillDir: String,
-      checkpointDir: String): StreamingQuery = {
-    val appId = "gapFillIngest-" + java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpointDir.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-    val in = spark.readStream.schema(schema).parquet(sourceDir)
-    val q = in.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        gapFillIngestBatch(batch, batchId, keyCol, tsCol, valueCol, tieBreak,
-          bucketWidth, mode, frontierDir, fillDir, appId)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      checkpointDir: String): StreamingQuery =
+    drainFolds(spark, sourceDir, schema, "gapFillIngest", checkpointDir)(
+      gapFillIngestBatch(_, _, keyCol, tsCol, valueCol, tieBreak, bucketWidth, mode, frontierDir,
+        fillDir, _))
 
   private[graft] def gapFillIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       keyCol: String,
       tsCol: String,
@@ -982,32 +807,31 @@ object StreamingIngest {
       frontierDir: String,
       fillDir: String,
       appId: String): Unit = {
-    import graft.operators.Temporal
     val s = batch.sparkSession
-    val ftbl = new graft.store.VersionedTable(s, frontierDir)
-    val otbl = new graft.store.VersionedTable(s, fillDir)
+    val ftbl = new VersionedTable(s, frontierDir)
+    val otbl = new VersionedTable(s, fillDir)
     // the frontier commits LAST, so its watermark says the WHOLE batch
     // applied — continuing an applied batch against the advanced frontier
     // would trip the strictly-after refusal (the r15 fold-replay class)
-    if (ftbl.exists && ftbl.txnApplied(appId, batchId)) return
+    if (replayed(ftbl, appId, batchId)) return
     if (batch.isEmpty) return
-    val b = batch.toDF()
-    val fills = (if (ftbl.exists)
-        Temporal.gapFillContinue(ftbl.read(), b, keyCol, tsCol, valueCol,
+    val fills =
+      if (ftbl.exists)
+        Temporal.gapFillContinue(ftbl.read(), batch, keyCol, tsCol, valueCol,
           tieBreak, bucketWidth, mode)
-      else Temporal.gapFill(b, keyCol, tsCol, valueCol, tieBreak,
-        bucketWidth, mode)).localCheckpoint(true)
-    otbl.appendIdempotent(fills, appId, batchId)
-    val nf = (if (ftbl.exists)
-        Temporal.gapFillFrontierFold(ftbl.read(), b, keyCol, tsCol, valueCol,
+      else Temporal.gapFill(batch, keyCol, tsCol, valueCol, tieBreak, bucketWidth, mode)
+    val nf =
+      if (ftbl.exists)
+        Temporal.gapFillFrontierFold(ftbl.read(), batch, keyCol, tsCol, valueCol,
           tieBreak, bucketWidth)
-      else Temporal.gapFillFrontier(b, keyCol, tsCol, valueCol, tieBreak,
-        bucketWidth)).localCheckpoint(true)
-    ftbl.overwriteIdempotent(nf, appId, batchId)
+      else Temporal.gapFillFrontier(batch, keyCol, tsCol, valueCol, tieBreak, bucketWidth)
+    val (fillsC, nfC) = (truncate(fills), truncate(nf))
+    otbl.appendIdempotent(fillsC, appId, batchId)
+    ftbl.overwriteIdempotent(nfC, appId, batchId)
   }
 
   private[graft] def transitionsIngestBatch(
-      batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+      batch: DataFrame,
       batchId: Long,
       keyCol: String,
       typeCol: String,
@@ -1016,28 +840,23 @@ object StreamingIngest {
       matrixDir: String,
       frontierDir: String,
       appId: String): Unit = {
-    import graft.operators.Temporal
     val s = batch.sparkSession
-    val mTbl = new graft.store.VersionedTable(s, matrixDir)
-    val fTbl = new graft.store.VersionedTable(s, frontierDir)
+    val mTbl = new VersionedTable(s, matrixDir)
+    val fTbl = new VersionedTable(s, frontierDir)
     // fully-applied replay: the frontier commits LAST, so its watermark
     // implies the matrix's — skip the fold entirely (re-folding against
     // the advanced frontier trips the strictly-later refusal). A
     // PARTIALLY-applied retry (matrix committed, frontier not) folds
     // against the OLD frontier — which succeeds — and the matrix
     // overwrite no-ops on its own watermark.
-    if (fTbl.exists && fTbl.txnApplied(appId, batchId)) return
-    val ev = batch.select(keyCol, typeCol, tsCol, tieBreak).toDF()
+    if (replayed(fTbl, appId, batchId)) return
+    val ev = batch.select(keyCol, typeCol, tsCol, tieBreak)
     val (m1, f1) =
       if (mTbl.exists && fTbl.exists)
         Temporal.transitionFold(mTbl.read(), fTbl.read(), ev,
           keyCol, typeCol, tsCol, tieBreak)
       else Temporal.transitionState(ev, keyCol, typeCol, tsCol, tieBreak)
-    // materialize BOTH before either overwrite commits (each derives from
-    // the files being replaced; eager evaluation also surfaces the fold's
-    // late-data refusal inside THIS batch)
-    val m1c = m1.localCheckpoint(true)
-    val f1c = f1.localCheckpoint(true)
+    val (m1c, f1c) = (truncate(m1), truncate(f1))
     mTbl.overwriteIdempotent(m1c, appId, batchId)
     fTbl.overwriteIdempotent(f1c, appId, batchId)
   }
