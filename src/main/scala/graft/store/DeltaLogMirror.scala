@@ -55,15 +55,17 @@ final class DeltaLogMirror(
   private def logPath(v: Long) = new HPath(logDir, f"$v%020d.json")
 
   /** Live mirror state after version `version`: table id + last-emitted
-    * schema/config + live (relative path → size/DV) file set + whether the
-    * deletion-vectors protocol upgrade has been emitted. */
+    * schema/config + live (relative path → add, DV included) file set +
+    * which protocol upgrades have been emitted. */
   // (case class nested in a final class: the unchecked-outer warning is moot,
   // State never crosses instances)
   private case class State(
       version: Long, tableId: String, schemaJson: String,
-      config: Map[String, String], files: Map[String, FileEntry],
+      config: Map[String, String], files: Map[String, DeltaTable.Add],
       dvProtocol: Boolean = false, cdfProtocol: Boolean = false,
-      twProtocol: Boolean = false)
+      twProtocol: Boolean = false) {
+    def protocol: Protocol = protocolOf(dvProtocol, cdfProtocol, twProtocol)
+  }
 
   // one cold replay per instance, then incremental
   private var cached: Option[State] = None
@@ -82,7 +84,7 @@ final class DeltaLogMirror(
     var dvProto = false
     var cdfProto = false
     var twProto = false
-    val files = scala.collection.mutable.LinkedHashMap[String, FileEntry]()
+    val files = scala.collection.mutable.LinkedHashMap[String, DeltaTable.Add]()
     (0L to upTo).foreach { v =>
       val p = logPath(v)
       if (fsu.exists(p)) fsu.readString(p).split('\n').filter(_.nonEmpty).foreach { line =>
@@ -109,11 +111,13 @@ final class DeltaLogMirror(
         if (node.has("add")) {
           val a = node.get("add")
           val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
-            DvDesc(d.get("pathOrInlineDv").asText(),
-              Option(d.get("offset")).map(_.asInt()).getOrElse(1),
+            DeletionVectors.Descriptor(d.get("storageType").asText(),
+              d.get("pathOrInlineDv").asText(), Option(d.get("offset")).map(_.asInt()),
               d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
           }
-          files(a.get("path").asText()) = FileEntry(a.get("size").asLong(), dv)
+          val p = a.get("path").asText()
+          files(p) = DeltaTable.Add(p, a.get("size").asLong(),
+            a.get("modificationTime").asLong(), Map.empty, None, dv)
         }
         if (node.has("remove")) files.remove(node.get("remove").get("path").asText())
       }
@@ -149,13 +153,8 @@ final class DeltaLogMirror(
       state = emit(v, state, target, earliest)
       // cadence: the table's delta.checkpointInterval property when set
       // (rides graft table properties into the mirrored configuration,
-      // same key delta-spark reads), else the protocol default 10.
-      // Tolerant parse — a junk property value must not fail the mirror
-      // of an already-committed graft write
-      val every = state.config.get("delta.checkpointInterval")
-        .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-        .filter(_ > 0).getOrElse(CheckpointInterval)
-      if (v > 0 && v % every == 0) writeCheckpoint(v, state)
+      // same key delta-spark reads), else the protocol default 10
+      if (v > 0 && v % checkpointEvery(state.config) == 0) writeCheckpoint(v, state)
       writeCrc(v, state)
     }
     cached = Some(state)
@@ -171,25 +170,11 @@ final class DeltaLogMirror(
     * fallback metaData). */
   private def writeCrc(v: Long, st: State): Unit = {
     if (st.schemaJson.isEmpty) return
-    val (minR, minW, rf, wf) =
-      if (st.dvProtocol || st.twProtocol) {
-        val (rs, ws) = DeltaLogMirror.featureLists(
-          st.dvProtocol, st.cdfProtocol, st.twProtocol)
-        (3, 7, rs, ws)
-      } else if (st.cdfProtocol) (1, 4, Seq.empty[String], Seq.empty[String])
-      else (1, 2, Seq.empty[String], Seq.empty[String])
-    val cfg = st.config ++
-      (if (st.config.get(VersionedTable.CdfProp).contains("true"))
-        Map("delta.enableChangeDataFeed" -> "true")
-      else Map.empty[String, String])
-    val adds = st.files.toSeq.map { case (p, fe) =>
-      DeltaTable.Add(p, fe.size, 0L, Map.empty, None,
-        fe.dv.map(d => DeletionVectors.Descriptor(
-          "p", d.path, Some(d.offset), d.size, d.card)))
-    }
+    val p = st.protocol
     val snap = DeltaTable.Snapshot(v,
       DataType.fromJson(st.schemaJson).asInstanceOf[StructType],
-      Nil, cfg, adds, st.tableId, minW, wf, minR, rf)
+      Nil, deltaConfig(st.config), st.files.values.toSeq, st.tableId,
+      p.minWriter, p.writerFeatures, p.minReader, p.readerFeatures)
     VersionChecksum.write(fsu, logDir, snap, None)
   }
 
@@ -203,29 +188,22 @@ final class DeltaLogMirror(
     import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
     val now = System.currentTimeMillis()
-    val protoRow =
-      if (state.dvProtocol || state.twProtocol) {
-        val (rs, ws) = DeltaLogMirror.featureLists(
-          state.dvProtocol, state.cdfProtocol, state.twProtocol)
-        Row(Row(3, 7, rs, ws), null, null, null)
-      }
-      else if (state.cdfProtocol) Row(Row(1, 4, null, null), null, null, null)
-      else Row(Row(1, 2, null, null), null, null, null)
-    // same config translation emitMetaData applies to the JSON commits:
-    // external CDF readers resolve configuration from the checkpoint once
-    // no later metaData action is in the tail, so the delta key must be
-    // present here too or table_changes dies every CheckpointInterval
-    val ckptConfig = state.config ++
-      (if (state.config.get(VersionedTable.CdfProp).contains("true"))
-        Map("delta.enableChangeDataFeed" -> "true")
-      else Map.empty[String, String])
+    val p = state.protocol
+    val protoRow = Row(Row(p.minReader, p.minWriter,
+      if (p.minReader >= 3) p.readerFeatures else null,
+      if (p.minWriter >= 7) p.writerFeatures else null), null, null, null)
+    // same config translation the JSON commits' metaData carries: external
+    // CDF readers resolve configuration from the checkpoint once no later
+    // metaData action is in the tail, so the delta key must be present
+    // here too or table_changes dies every CheckpointInterval
     val metaRow = Row(null,
       Row(state.tableId, null, null, Row("parquet", Map.empty[String, String]),
-        state.schemaJson, Seq.empty[String], ckptConfig, now),
+        state.schemaJson, Seq.empty[String], deltaConfig(state.config), now),
       null, null)
-    val addRows = state.files.toSeq.sortBy(_._1).map { case (p, fe) =>
-      Row(null, null, Row(p, Map.empty[String, String], fe.size, now, false,
-        fe.dv.map(d => Row("p", d.path, d.offset, d.size, d.card)).orNull),
+    val addRows = state.files.toSeq.sortBy(_._1).map { case (path, a) =>
+      Row(null, null, Row(path, Map.empty[String, String], a.size, now, false,
+        a.dv.map(d => Row(d.storageType, d.pathOrInlineDv,
+          d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull),
         null)
     }
     // graft.txn.* idempotency watermarks as protocol SetTransaction rows:
@@ -238,49 +216,28 @@ final class DeltaLogMirror(
     val rows: Seq[Row] = Seq(protoRow, metaRow) ++ addRows ++ txnRows
     DeltaLogMirror.publishCheckpoint(spark, fsu, logDir, v, rows,
       DeltaLogMirror.checkpointSchema,
-      partSize = state.config.get("delta.checkpoint.partSize")
-        .flatMap(x => scala.util.Try(x.trim.toLong).toOption))
+      partSize = positiveLongProp(state.config, "delta.checkpoint.partSize"))
   }
 
-  /** (relative path → (size, mtime)) of one data dir, listed from disk. */
-  private def listDir(dir: String): Seq[(String, Long, Long)] =
+  /** The parquet files of one data dir as (DV-less) adds, listed from disk. */
+  private def listDir(dir: String): Seq[DeltaTable.Add] =
     fsu.fs.listStatus(new HPath(tablePath, s"data/$dir")).toSeq
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
         !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      .map(st => (s"data/$dir/${st.getPath.getName}", st.getLen, st.getModificationTime))
+      .map(st => DeltaTable.Add(s"data/$dir/${st.getPath.getName}", st.getLen,
+        st.getModificationTime, Map.empty, None))
 
   private def emit(
       v: Long, state: State, target: Option[Manifest],
       metaFallback: => Manifest): State = {
     val now = System.currentTimeMillis()
     val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def obj() = mapper.createObjectNode()
+    def emitMetaData(schemaJson: String, props: Map[String, String]): Unit =
+      lines += DeltaActions.metaData(state.tableId, schemaJson, Nil, deltaConfig(props), now)
 
-    def emitMetaData(schemaJson: String, props: Map[String, String]): Unit = {
-      val md = obj()
-      val mdn = md.putObject("metaData")
-      mdn.put("id", state.tableId)
-      val fmt = mdn.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdn.put("schemaString", schemaJson)
-      mdn.putArray("partitionColumns")
-      val cfg = mdn.putObject("configuration")
-      props.foreach { case (k, value) => cfg.put(k, value) }
-      // Delta clients discover the feed through their own config key
-      if (props.get(VersionedTable.CdfProp).contains("true"))
-        cfg.put("delta.enableChangeDataFeed", "true")
-      mdn.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-    }
-
-    val ci = obj()
-    val cin = ci.putObject("commitInfo")
-    cin.put("timestamp", now)
-    cin.put("operation", if (target.isEmpty) "HEAL" else if (v == 0L) "CREATE TABLE AS SELECT" else "WRITE")
-    cin.putObject("operationParameters")
-    cin.put("engineInfo", "graft-versioned-table")
-    lines += mapper.writeValueAsString(ci)
+    lines += DeltaActions.commitInfo(now, None,
+      if (target.isEmpty) "HEAL" else if (v == 0L) "CREATE TABLE AS SELECT" else "WRITE",
+      Nil, "graft-versioned-table")
 
     // Protocol: (1,2) at table creation; the FIRST commit whose manifest
     // carries deletion vectors upgrades in place to the table-features form
@@ -313,28 +270,10 @@ final class DeltaLogMirror(
     val upgradeDv = targetHasDv && !state.dvProtocol
     val upgradeCdf = targetCdf && !state.cdfProtocol
     val upgradeTw = targetTw && !state.twProtocol
-    val needDv = targetHasDv || state.dvProtocol
-    val needCdf = targetCdf || state.cdfProtocol
-    val needTw = targetTw || state.twProtocol
     if (v == 0L || upgradeDv || upgradeCdf || upgradeTw) {
-      val pr = obj()
-      val prn = pr.putObject("protocol")
-      if (needDv || needTw) {
-        prn.put("minReaderVersion", 3)
-        prn.put("minWriterVersion", 7)
-        val rf = prn.putArray("readerFeatures")
-        val wf = prn.putArray("writerFeatures")
-        DeltaLogMirror.featureLists(needDv, needCdf, needTw) match {
-          case (rs, ws) => rs.foreach(rf.add); ws.foreach(wf.add)
-        }
-      } else if (needCdf) {
-        prn.put("minReaderVersion", 1)
-        prn.put("minWriterVersion", 4)
-      } else {
-        prn.put("minReaderVersion", 1)
-        prn.put("minWriterVersion", 2)
-      }
-      lines += mapper.writeValueAsString(pr)
+      val p = protocolOf(targetHasDv || state.dvProtocol,
+        targetCdf || state.cdfProtocol, targetTw || state.twProtocol)
+      lines += DeltaActions.protocol(p.minReader, p.minWriter, p.readerFeatures, p.writerFeatures)
     }
 
     val next = target match {
@@ -352,71 +291,41 @@ final class DeltaLogMirror(
         // manifest DV entries → Delta descriptors ("p" storage: graft DV
         // container files use the protocol's exact on-disk block layout, so
         // an absolute path + offset is all an external reader needs)
-        val dvByPath: Map[String, DvDesc] = man.dirs.flatMap { d =>
+        val dvByPath: Map[String, DeletionVectors.Descriptor] = man.dirs.flatMap { d =>
           d.dv.map { e =>
-            s"data/${d.dir}/${e.file}" -> DvDesc(
+            s"data/${d.dir}/${e.file}" -> DeletionVectors.Descriptor("p",
               fsu.fs.makeQualified(
                 new HPath(tablePath, s"deletion_vectors/${e.bin}")).toString,
-              e.offset, e.size, e.cardinality)
+              Some(e.offset), e.size, e.cardinality)
           }
         }.toMap
         // target live set: reuse replayed entries for dirs already live
         // (immutable), list only unseen dirs from disk
-        val targetFiles = scala.collection.mutable.LinkedHashMap[String, (Long, Long, Option[DvDesc])]()
+        val targetFiles = scala.collection.mutable.LinkedHashMap[String, DeltaTable.Add]()
         man.dirs.foreach { d =>
           val prefix = s"data/${d.dir}/"
-          val known = state.files.collect { case (p, fe) if p.startsWith(prefix) => (p, fe.size, 0L) }
-          (if (known.nonEmpty) known.toSeq else listDir(d.dir)).foreach {
-            case (p, sz, mt) => targetFiles(p) = (sz, mt, dvByPath.get(p))
+          val known = state.files.values.filter(_.rawPath.startsWith(prefix))
+          (if (known.nonEmpty) known.toSeq else listDir(d.dir)).foreach { a =>
+            targetFiles(a.rawPath) = a.copy(dv = dvByPath.get(a.rawPath))
           }
         }
-        // a file whose DV changed is logically replaced: remove + re-add
-        // with the new descriptor (the Delta DV-commit shape)
-        state.files.foreach { case (p, fe) =>
-          val gone = !targetFiles.contains(p)
-          val dvChanged = targetFiles.get(p).exists(_._3 != fe.dv)
-          if (gone || dvChanged) {
-            val rm = obj()
-            val rmn = rm.putObject("remove")
-            rmn.put("path", p)
-            rmn.put("deletionTimestamp", now)
-            rmn.put("dataChange", true)
-            lines += mapper.writeValueAsString(rm)
-          }
+        // a file whose DV changed is logically replaced: remove (with the
+        // old descriptor) + re-add with the new one (the Delta DV-commit
+        // shape)
+        state.files.values.foreach { a =>
+          if (targetFiles.get(a.rawPath).forall(_.dv != a.dv))
+            lines += DeltaActions.remove(a, now, dataChange = true)
         }
-        targetFiles.foreach { case (p, (sz, mt, dv)) =>
-          val prev = state.files.get(p)
-          if (prev.isEmpty || prev.exists(_.dv != dv)) {
-            val ad = obj()
-            val adn = ad.putObject("add")
-            adn.put("path", p)
-            adn.putObject("partitionValues")
-            adn.put("size", sz)
-            adn.put("modificationTime", if (mt > 0) mt else now)
-            adn.put("dataChange", true)
-            dv.foreach { d =>
-              val dvn = adn.putObject("deletionVector")
-              dvn.put("storageType", "p")
-              dvn.put("pathOrInlineDv", d.path)
-              dvn.put("offset", d.offset)
-              dvn.put("sizeInBytes", d.size)
-              dvn.put("cardinality", d.card)
-            }
-            lines += mapper.writeValueAsString(ad)
-          }
+        targetFiles.values.foreach { a =>
+          if (state.files.get(a.rawPath).forall(_.dv != a.dv))
+            lines += DeltaActions.add(a, dataChange = true)
         }
         // graft.txn.* watermarks that moved in THIS commit become protocol
         // SetTransaction actions — an external engine's txnVersion(appId)
         // sees graft's exactly-once state natively
         man.properties.foreach { case (k, value) =>
-          if (k.startsWith("graft.txn.") && !state.config.get(k).contains(value)) {
-            val tx = obj()
-            val txn = tx.putObject("txn")
-            txn.put("appId", k.stripPrefix("graft.txn."))
-            txn.put("version", value.toLong)
-            txn.put("lastUpdated", now)
-            lines += mapper.writeValueAsString(tx)
-          }
+          if (k.startsWith("graft.txn.") && !state.config.get(k).contains(value))
+            lines += DeltaActions.txn(k.stripPrefix("graft.txn."), value.toLong, now)
         }
         // real Delta cdc actions over the graft-materialized change files:
         // a CDF-enabled merge/delete commit points `table_changes` readers
@@ -428,19 +337,13 @@ final class DeltaLogMirror(
             .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
               !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
             .foreach { st =>
-              val cdc = obj()
-              val cn = cdc.putObject("cdc")
-              cn.put("path", new java.net.URI(null, null,
-                s"_change_data/$cd/${st.getPath.getName}", null).toASCIIString)
-              cn.putObject("partitionValues")
-              cn.put("size", st.getLen)
-              cn.put("dataChange", false)
-              lines += mapper.writeValueAsString(cdc)
+              lines += DeltaActions.cdc(new java.net.URI(null, null,
+                s"_change_data/$cd/${st.getPath.getName}", null).toASCIIString,
+                Nil, st.getLen)
             }
         }
         state.copy(version = v, schemaJson = mirSchemaJson,
-          config = man.properties,
-          files = targetFiles.map { case (p, (sz, _, dv)) => p -> FileEntry(sz, dv) }.toMap,
+          config = man.properties, files = targetFiles.toMap,
           dvProtocol = state.dvProtocol || upgradeDv,
           cdfProtocol = state.cdfProtocol || upgradeCdf,
           twProtocol = state.twProtocol || upgradeTw)
@@ -470,17 +373,76 @@ object DeltaLogMirror {
   /** Delta's default checkpoint cadence. */
   val CheckpointInterval = 10L
 
-  /** (readerFeatures, writerFeatures) for the mirror's (3,7) protocol —
-    * one builder so the JSON commits and the checkpoint rows agree. */
-  private[store] def featureLists(
-      dv: Boolean, cdf: Boolean, tw: Boolean): (Seq[String], Seq[String]) = {
-    val rs = (if (dv) Seq("deletionVectors") else Nil) ++
-      (if (tw) Seq(TypeWidening.Feature) else Nil)
-    val ws = Seq("appendOnly", "invariants") ++
-      (if (dv) Seq("deletionVectors") else Nil) ++
-      (if (cdf) Seq("changeDataFeed") else Nil) ++
-      (if (tw) Seq(TypeWidening.Feature) else Nil)
-    (rs, ws)
+  private final case class Protocol(
+      minReader: Int, minWriter: Int,
+      readerFeatures: Seq[String], writerFeatures: Seq[String])
+
+  /** The mirror's protocol for its cumulative feature set — one derivation
+    * so the JSON commits, the crc and the checkpoint rows agree: (1,2)
+    * plain, (1,4) the legacy CDF writer, and the table-features form (3,7)
+    * once deletion vectors or type widening are in play, with the legacy
+    * writer features listed so the set stays complete after upgrades. */
+  private def protocolOf(dv: Boolean, cdf: Boolean, tw: Boolean): Protocol =
+    if (dv || tw)
+      Protocol(3, 7,
+        (if (dv) Seq("deletionVectors") else Nil) ++
+          (if (tw) Seq(TypeWidening.Feature) else Nil),
+        Seq("appendOnly", "invariants") ++
+          (if (dv) Seq("deletionVectors") else Nil) ++
+          (if (cdf) Seq("changeDataFeed") else Nil) ++
+          (if (tw) Seq(TypeWidening.Feature) else Nil))
+    else if (cdf) Protocol(1, 4, Nil, Nil)
+    else Protocol(1, 2, Nil, Nil)
+
+  /** Mirrored table configuration: the graft properties plus
+    * `delta.enableChangeDataFeed` under graft's CDF property — Delta
+    * clients discover the feed through their own config key. */
+  private def deltaConfig(props: Map[String, String]): Map[String, String] =
+    if (props.get(VersionedTable.CdfProp).contains("true"))
+      props + ("delta.enableChangeDataFeed" -> "true")
+    else props
+
+  /** A positive long table property, or None when absent or malformed.
+    * Tolerant by design: it is read after a commit is already published,
+    * so a junk value another tool wrote must fall back to the default,
+    * never make a durably-committed write appear to fail (the caller
+    * would retry and duplicate rows). */
+  private[store] def positiveLongProp(config: Map[String, String], key: String): Option[Long] =
+    config.get(key).flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ > 0)
+
+  /** The checkpoint cadence — delta-spark's `delta.checkpointInterval`
+    * table property, else [[CheckpointInterval]]. */
+  private[store] def checkpointEvery(config: Map[String, String]): Long =
+    positiveLongProp(config, "delta.checkpointInterval").getOrElse(CheckpointInterval)
+
+  /** Write `rows` as ONE plain parquet file at `dest`: Spark writes a
+    * directory, the protocol wants plain files — write to a temp sibling
+    * dir and rename the single part into place. */
+  private def writeParquetFile(
+      spark: SparkSession, fsu: Fs, logDir: HPath,
+      rows: Seq[org.apache.spark.sql.Row], schema: StructType, dest: HPath): Unit = {
+    val tmp = new HPath(logDir, s".cptmp-${UUID.randomUUID()}")
+    spark.createDataFrame(rows.asJava, schema).coalesce(1)
+      .write.mode("overwrite").parquet(tmp.toString)
+    val part = fsu.fs.listStatus(tmp).map(_.getPath)
+      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
+    fsu.deleteIfExists(dest)
+    if (!fsu.fs.rename(part, dest))
+      throw new java.io.IOException(s"rename $part -> $dest failed")
+    fsu.delete(tmp, recursive = true)
+  }
+
+  /** The `_last_checkpoint` pointer at version `v`. */
+  private def writeLastCheckpoint(
+      fsu: Fs, logDir: HPath, v: Long, size: Long, parts: Option[Int]): Unit = {
+    import VersionedTable.mapper
+    val lc = mapper.createObjectNode()
+    lc.put("version", v)
+    lc.put("size", size)
+    parts.foreach(p => lc.put("parts", p): Unit)
+    fsu.writeStringAtomic(new HPath(logDir, "_last_checkpoint"),
+      mapper.writeValueAsString(lc))
   }
 
   /** Publish `rows` as the classic parquet checkpoint for version `v`
@@ -491,28 +453,14 @@ object DeltaLogMirror {
     * total). At 100 TB a legacy-protocol table (no v2Checkpoint feature
     * available) can hold millions of add actions; partSize bounds each
     * checkpoint file so no single write or read materializes the whole
-    * state in one task. Spark writes a directory; the protocol wants
-    * plain FILES — write to a temp sibling dir and rename into place.
-    * Shared by the graft-manifest mirror and the foreign-Delta writer. */
+    * state in one task. Shared by the graft-manifest mirror and the
+    * foreign-Delta writer. */
   private[store] def publishCheckpoint(
       spark: SparkSession, fsu: Fs, logDir: HPath, v: Long,
       rows: Seq[org.apache.spark.sql.Row], schema: StructType,
       partSize: Option[Long] = None): Unit = {
-    import scala.jdk.CollectionConverters._
-    import VersionedTable.mapper
-    def writeOne(slice: Seq[org.apache.spark.sql.Row], destName: String): Unit = {
-      val df = spark.createDataFrame(slice.asJava, schema).coalesce(1)
-      val tmp = new HPath(logDir, s".cptmp-${UUID.randomUUID()}")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      val part = fsu.fs.listStatus(tmp).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-      val dest = new HPath(logDir, destName)
-      fsu.deleteIfExists(dest)
-      if (!fsu.fs.rename(part, dest))
-        throw new java.io.IOException(s"rename $part -> $dest failed")
-      fsu.delete(tmp, recursive = true)
-    }
+    def writeOne(slice: Seq[org.apache.spark.sql.Row], destName: String): Unit =
+      writeParquetFile(spark, fsu, logDir, slice, schema, new HPath(logDir, destName))
     val nParts = partSize.filter(ps => ps > 0 && rows.size > ps)
       .map(ps => math.ceil(rows.size.toDouble / ps).toInt)
     nParts match {
@@ -524,12 +472,7 @@ object DeltaLogMirror {
           writeOne(slice, f"$v%020d.checkpoint.${i + 1}%010d.$p%010d.parquet")
         }
     }
-    val lc = mapper.createObjectNode()
-    lc.put("version", v)
-    lc.put("size", rows.size.toLong)
-    nParts.foreach(p => lc.put("parts", p): Unit)
-    fsu.writeStringAtomic(new HPath(logDir, "_last_checkpoint"),
-      mapper.writeValueAsString(lc))
+    writeLastCheckpoint(fsu, logDir, v, rows.size.toLong, nParts)
   }
 
   /** Publish a V2-spec checkpoint for version `v` (PROTOCOL.md "V2 Spec
@@ -545,25 +488,12 @@ object DeltaLogMirror {
       manifestRows: Seq[org.apache.spark.sql.Row],
       fileRows: Seq[org.apache.spark.sql.Row],
       baseSchema: StructType): Unit = {
-    import scala.jdk.CollectionConverters._
     import org.apache.spark.sql.Row
-    import VersionedTable.mapper
-    def writeOnePart(df: org.apache.spark.sql.DataFrame, dest: HPath): Unit = {
-      val tmp = new HPath(logDir, s".cptmp-${UUID.randomUUID()}")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = fsu.fs.listStatus(tmp).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
-      fsu.deleteIfExists(dest)
-      if (!fsu.fs.rename(part, dest))
-        throw new java.io.IOException(s"rename $part -> $dest failed")
-      fsu.delete(tmp, recursive = true)
-    }
     val sidecarDir = new HPath(logDir, "_sidecars")
     fsu.mkdirs(sidecarDir)
     val sideName = s"${UUID.randomUUID()}.parquet"
     val sideDest = new HPath(sidecarDir, sideName)
-    writeOnePart(spark.createDataFrame(fileRows.asJava, baseSchema), sideDest)
+    writeParquetFile(spark, fsu, logDir, fileRows, baseSchema, sideDest)
     val sideStat = fsu.fs.getFileStatus(sideDest)
     val cmT = StructType(Seq(
       StructField("version", LongType),
@@ -582,25 +512,14 @@ object DeltaLogMirror {
       Row.fromSeq(blank ++ Seq(null,
         Row(sideName, sideStat.getLen, sideStat.getModificationTime,
           Map.empty[String, String]))))
-    writeOnePart(spark.createDataFrame(rows.asJava, schema),
+    writeParquetFile(spark, fsu, logDir, rows, schema,
       new HPath(logDir, f"$v%020d.checkpoint.${UUID.randomUUID()}.parquet"))
-    val lc = mapper.createObjectNode()
-    lc.put("version", v)
-    lc.put("size", (rows.size + fileRows.size).toLong)
-    fsu.writeStringAtomic(new HPath(logDir, "_last_checkpoint"),
-      mapper.writeValueAsString(lc))
+    writeLastCheckpoint(fsu, logDir, v, (rows.size + fileRows.size).toLong, None)
   }
 
   /** The protocol checkpoint row schema (public Delta transaction protocol;
     * optional action columns omitted stay absent — readers treat missing
     * nullable columns as null). */
-  /** One live file of the mirrored state: size + optional DV descriptor. */
-  private[store] final case class FileEntry(size: Long, dv: Option[DvDesc])
-  /** A Delta deletion-vector descriptor as the mirror emits it ("p"
-    * storage: absolute container path + block offset/size/cardinality). */
-  private[store] final case class DvDesc(
-      path: String, offset: Int, size: Int, card: Long)
-
   private[store] val checkpointSchema: StructType = StructType(Seq(
     StructField("protocol", StructType(Seq(
       StructField("minReaderVersion", IntegerType),

@@ -331,34 +331,9 @@ object DeltaTable {
     * parquet.field.id metadata and lets Spark's reader match by the field
     * ids the writer stamped. Identity view for unmapped tables. Shared by
     * [[readInternal]] and the CDF change-file scan ([[readChanges]]). */
-  private final class PhysView(path: String, snap: Snapshot) {
-    private val mode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
-    val mapped: Boolean = mode != "none" // snapshot() already rejected unknown modes
-    val idMode: Boolean = mode == "id"
-    private val PhysKey = "delta.columnMapping.physicalName"
-    private val IdKey = "delta.columnMapping.id"
-    def physName(f: StructField): String =
-      if (!mapped) f.name
-      else if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey)
-      else throw new IllegalArgumentException(
-        s"column-mapped Delta table $path: field ${f.name} has no $PhysKey metadata")
-    private def fieldMeta(f: StructField): Metadata =
-      if (!idMode) Metadata.empty
-      else if (f.metadata.contains(IdKey)) new MetadataBuilder()
-        .putLong("parquet.field.id", f.metadata.getLong(IdKey)).build()
-      else throw new IllegalArgumentException(
-        s"id-mapped Delta table $path: field ${f.name} has no $IdKey metadata")
-    def physField(f: StructField): StructField =
-      StructField(physName(f), physType(f.dataType), f.nullable, fieldMeta(f))
-    def physType(dt: DataType): DataType =
-      if (!mapped) dt
-      else dt match {
-        case s: StructType => StructType(s.fields.map(physField))
-        case a: ArrayType => a.copy(elementType = physType(a.elementType))
-        case m: MapType =>
-          m.copy(keyType = physType(m.keyType), valueType = physType(m.valueType))
-        case other => other
-      }
+  private final class PhysView(path: String, snap: Snapshot)
+      extends ColumnMapping(snap.configuration, s"Delta table $path",
+        new IllegalArgumentException(_)) {
     private val lowerParts = snap.partitionColumns.map(_.toLowerCase).toSet
     val partSchema: StructType = StructType(snap.partitionColumns.map { c =>
       val f = snap.schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
@@ -382,6 +357,47 @@ object DeltaTable {
       * session reads are unaffected. */
     def prepareSession(spark: SparkSession): Unit =
       if (idMode) spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+  }
+
+  /** Column-mapping key of a field's physical (file and stats) name. */
+  private[store] val PhysKey = "delta.columnMapping.physicalName"
+  /** Column-mapping key of a field's id (parquet field id in id mode). */
+  private[store] val IdKey = "delta.columnMapping.id"
+
+  /** Column-mapping field translation for one table configuration, shared
+    * by the reader ([[PhysView]]) and the foreign writer's plan: a logical
+    * field's physical name (the physicalName metadata, in BOTH modes),
+    * plus, in id mode, the `parquet.field.id` metadata Spark's parquet
+    * reader and writer resolve columns by; nested fields map recursively.
+    * Identity for unmapped tables (callers reject unknown modes first).
+    * A field missing its mapping metadata fails with `error` — each caller
+    * keeps its own exception type — naming the table as `table`. */
+  private[store] class ColumnMapping(
+      configuration: Map[String, String], table: String,
+      error: String => RuntimeException) {
+    private val mode = configuration.getOrElse("delta.columnMapping.mode", "none")
+    val mapped: Boolean = mode != "none"
+    val idMode: Boolean = mode == "id"
+    def physName(f: StructField): String =
+      if (!mapped) f.name
+      else if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey)
+      else throw error(s"column-mapped $table: field ${f.name} has no $PhysKey metadata")
+    private def fieldMeta(f: StructField): Metadata =
+      if (!idMode) Metadata.empty
+      else if (f.metadata.contains(IdKey)) new MetadataBuilder()
+        .putLong("parquet.field.id", f.metadata.getLong(IdKey)).build()
+      else throw error(s"id-mapped $table: field ${f.name} has no $IdKey metadata")
+    def physField(f: StructField): StructField =
+      StructField(physName(f), physType(f.dataType), f.nullable, fieldMeta(f))
+    def physType(dt: DataType): DataType =
+      if (!mapped) dt
+      else dt match {
+        case s: StructType => StructType(s.fields.map(physField))
+        case a: ArrayType => a.copy(elementType = physType(a.elementType))
+        case m: MapType =>
+          m.copy(keyType = physType(m.keyType), valueType = physType(m.valueType))
+        case other => other
+      }
   }
 
   private def readInternal(

@@ -216,35 +216,15 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       fsu.fs, new HPath(root, binName), perFile.map(_._2).toSeq)
 
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def obj() = mapper.createObjectNode()
-    val ci = obj()
-    val cin = ci.putObject("commitInfo")
-    cin.put("timestamp", now)
-    ictFor(s, now).foreach(v => cin.put("inCommitTimestamp", v): Unit)
-    cin.put("operation", "DELETE")
-    cin.putObject("operationParameters")
-    cin.put("engineInfo", "graft-foreign-delta-writer")
-    lines += mapper.writeValueAsString(ci)
-    if (!hasDv) lines += protocolUpgradeLine(s, "deletionVectors")
-    lines ++= dvReAddLines(perFile, offs, addByAbs, uuidRef, now)
-    cdcW.foreach(lines ++= cdcLines(_))
-    val v = s.version + 1
-    attemptFootprint =
-      Some((s.version, perFile.map(pf => addByAbs(pf._1).rawPath).toSet))
-    onBeforeCommit()
-    try fsu.writeStringAtomicNew(logPath(v), lines.mkString("\n"))
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
+    val lines = Seq(commitInfoLine(s, now, "DELETE")) ++
+      (if (!hasDv) Seq(protocolUpgradeLine(s, "deletionVectors")) else Nil) ++
+      dvReAddLines(perFile, offs, addByAbs, uuidRef, now) ++
+      cdcW.toSeq.flatMap(cdcLines)
+    claim(s, perFile.map(pf => addByAbs(pf._1).rawPath).toSet, lines,
+      "re-run the delete against the fresh snapshot", cleanup = {
         fsu.deleteIfExists(new HPath(root, binName))
         cdcW.foreach(w => fsu.fs.delete(new HPath(root, w.dirName), true))
-        throw new java.util.ConcurrentModificationException(
-          s"lost the commit race on Delta table $path at version $v — " +
-            "re-run the delete against the fresh snapshot")
-    }
-    postCommit(v)
-    v
+      })
   }
 
   /** The (3,7) protocol-upgrade action adding `feature` (a reader+writer
@@ -264,27 +244,21 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
           (if (v >= 5) Seq("columnMapping") else Nil) ++
           (if (v >= 6) Seq("identityColumns") else Nil)
     }
-    val pr = mapper.createObjectNode()
-    val prn = pr.putObject("protocol")
-    prn.put("minReaderVersion", 3)
-    prn.put("minWriterVersion", 7)
-    val rf = prn.putArray("readerFeatures")
     val impliedReader =
       if (s.minReaderVersion >= 3) s.readerFeatures
       else if (s.minReaderVersion >= 2) Seq("columnMapping")
       else Nil
-    ((impliedReader :+ feature).distinct).foreach(rf.add)
-    val wf = prn.putArray("writerFeatures")
-    (implied :+ feature).distinct.foreach(wf.add)
-    mapper.writeValueAsString(pr)
+    DeltaActions.protocol(3, 7,
+      (impliedReader :+ feature).distinct, (implied :+ feature).distinct)
   }
 
   /** remove + re-add action pairs for files gaining a deletion vector:
-    * partition values/stats carry verbatim (stats marked WIDE —
-    * tightBounds=false stops metadata-only MIN/MAX answers from reading
-    * deleted values; numRecords stays physical), row-tracking fields carry
-    * verbatim (or existing row ids would shift), and the new descriptor
-    * points into the commit's shared "u"-storage container. */
+    * the remove names the file's OLD descriptor (if any), partition
+    * values/stats carry verbatim (stats marked WIDE — tightBounds=false
+    * stops metadata-only MIN/MAX answers from reading deleted values;
+    * numRecords stays physical), row-tracking fields carry verbatim (or
+    * existing row ids would shift), and the new descriptor points into
+    * the commit's shared "u"-storage container. */
   private def dvReAddLines(
       perFile: Array[(String, Array[Byte], Long)],
       offs: Seq[(Int, Int)],
@@ -293,58 +267,24 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     perFile.zip(offs).toSeq.flatMap { case ((abs, _, card), (off, size)) =>
       val add = addByAbs.getOrElse(abs, throw new IllegalStateException(
         s"scanned file $abs not in the snapshot's add set"))
-      val rm = mapper.createObjectNode()
-      val rmn = rm.putObject("remove")
-      rmn.put("path", add.rawPath)
-      rmn.put("deletionTimestamp", now)
-      rmn.put("dataChange", true)
-      val ad = mapper.createObjectNode()
-      val adn = ad.putObject("add")
-      adn.put("path", add.rawPath)
-      val pvn = adn.putObject("partitionValues")
-      add.partitionValues.foreach {
-        case (k, Some(v)) => pvn.put(k, v): Unit
-        case (k, None) => pvn.putNull(k): Unit
-      }
-      adn.put("size", add.size)
-      adn.put("modificationTime", add.mtime)
-      adn.put("dataChange", true)
-      add.statsJson.foreach { sj =>
-        val wide = mapper.readTree(sj) match {
+      val wide = add.statsJson.map { sj =>
+        mapper.writeValueAsString(mapper.readTree(sj) match {
           case o: com.fasterxml.jackson.databind.node.ObjectNode =>
             o.put("tightBounds", false); o
           case other => other
-        }
-        adn.put("stats", mapper.writeValueAsString(wide)): Unit
+        })
       }
-      add.baseRowId.foreach(b => adn.put("baseRowId", b): Unit)
-      add.defaultRowCommitVersion.foreach(d =>
-        adn.put("defaultRowCommitVersion", d): Unit)
-      val dvn = adn.putObject("deletionVector")
-      dvn.put("storageType", "u")
-      dvn.put("pathOrInlineDv", uuidRef)
-      dvn.put("offset", off)
-      dvn.put("sizeInBytes", size)
-      dvn.put("cardinality", card)
-      Seq(mapper.writeValueAsString(rm), mapper.writeValueAsString(ad))
+      Seq(DeltaActions.remove(add, now, dataChange = true),
+        DeltaActions.add(add.copy(statsJson = wide, dv = Some(
+          DeletionVectors.Descriptor("u", uuidRef, Some(off), size, card))),
+          dataChange = true))
     }
 
   /** cdc actions pointing at the commit's materialized `_change_data/`
     * files (dataChange=false — change files are metadata to the snapshot). */
   private def cdcLines(w: Written): Seq[String] =
     w.parts.map { case (rel, size, _) =>
-      val c = mapper.createObjectNode()
-      val cn = c.putObject("cdc")
-      cn.put("path",
-        new java.net.URI(null, null, s"${w.dirName}/$rel", null).toASCIIString)
-      val pvn = cn.putObject("partitionValues")
-      w.partValues(rel).foreach {
-        case (k, Some(pv)) => pvn.put(k, pv): Unit
-        case (k, None) => pvn.putNull(k): Unit
-      }
-      cn.put("size", size)
-      cn.put("dataChange", false)
-      mapper.writeValueAsString(c)
+      DeltaActions.cdc(w.uriOf(rel), w.partValues(rel), size)
     }
 
   /** Rows selected by `matcher` (over the DV-filtered live scan with file
@@ -562,84 +502,22 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       else DeletionVectors.writeBin(
         fsu.fs, new HPath(root, binName), perFile.map(_._2).toSeq)
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def obj() = mapper.createObjectNode()
-    val ci = obj()
-    val cin = ci.putObject("commitInfo")
-    cin.put("timestamp", now)
-    ictFor(s, now).foreach(v => cin.put("inCommitTimestamp", v): Unit)
-    cin.put("operation", opName)
-    cin.putObject("operationParameters")
-    cin.put("engineInfo", "graft-foreign-delta-writer")
-    lines += mapper.writeValueAsString(ci)
-    if (!hasDv) lines += protocolUpgradeLine(s, "deletionVectors")
-    // schema-metadata update riding the mutation (identity high-water
-    // mark advanced by explicit MERGE inserts)
-    metaSchema.filter(_.json != s.schema.json).foreach { ms =>
-      val md = obj()
-      val mdn = md.putObject("metaData")
-      mdn.put("id", if (s.tableId.nonEmpty) s.tableId else UUID.randomUUID().toString)
-      val fmt = mdn.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdn.put("schemaString", ms.json)
-      val pcArr = mdn.putArray("partitionColumns")
-      s.partitionColumns.foreach(pcArr.add)
-      val cfg = mdn.putObject("configuration")
-      s.configuration.foreach { case (k, cv) => cfg.put(k, cv) }
-      mdn.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-    }
-    lines ++= dvReAddLines(perFile, offs, addByAbs, uuidRef, now)
     val v = s.version + 1
-    val rowTracking = s.writerFeatures.contains("rowTracking")
-    var hwm = rowIdHighWaterMark(s)
-    newW.foreach { w =>
-      w.parts.foreach { case (rel, size, mtime) =>
-        val ad = obj()
-        val adn = ad.putObject("add")
-        adn.put("path",
-          new java.net.URI(null, null, s"${w.dirName}/$rel", null).toASCIIString)
-        val pvn = adn.putObject("partitionValues")
-        w.partValues(rel).foreach {
-          case (k, Some(pv)) => pvn.put(k, pv): Unit
-          case (k, None) => pvn.putNull(k): Unit
-        }
-        adn.put("size", size)
-        adn.put("modificationTime", mtime)
-        adn.put("dataChange", true)
-        w.statsByFile.get(rel).foreach(adn.put("stats", _))
-        if (rowTracking) {
-          val n = w.statsByFile.get(rel)
-            .flatMap(sj => Option(mapper.readTree(sj).get("numRecords"))
-              .map(_.asLong()))
-            .getOrElse(refuse(
-              s"row tracking needs a numRecords stat for $rel to assign ids"))
-          adn.put("baseRowId", hwm + 1)
-          adn.put("defaultRowCommitVersion", v)
-          hwm += n
-        }
-        lines += mapper.writeValueAsString(ad)
-      }
-      if (rowTracking && w.parts.nonEmpty) lines += rowTrackingDomainLine(hwm)
-    }
-    cdcW.foreach(lines ++= cdcLines(_))
-    attemptFootprint =
-      Some((s.version, perFile.map(pf => addByAbs(pf._1).rawPath).toSet))
-    onBeforeCommit()
-    try fsu.writeStringAtomicNew(logPath(v), lines.mkString("\n"))
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
+    val lines = Seq(commitInfoLine(s, now, opName)) ++
+      (if (!hasDv) Seq(protocolUpgradeLine(s, "deletionVectors")) else Nil) ++
+      // schema-metadata update riding the mutation (identity high-water
+      // mark advanced by explicit MERGE inserts)
+      metaSchema.filter(_.json != s.schema.json).map(ms =>
+        metaDataLine(s, ms.json, s.partitionColumns, s.configuration, now)) ++
+      dvReAddLines(perFile, offs, addByAbs, uuidRef, now) ++
+      newW.toSeq.flatMap(freshAddLines(s, v, _, dataChange = true)) ++
+      cdcW.toSeq.flatMap(cdcLines)
+    claim(s, perFile.map(pf => addByAbs(pf._1).rawPath).toSet, lines,
+      s"re-run the ${opName.toLowerCase} against the fresh snapshot", cleanup = {
         if (perFile.nonEmpty) fsu.deleteIfExists(new HPath(root, binName))
         newW.foreach(w => fsu.fs.delete(new HPath(root, w.dirName), true))
         cdcW.foreach(cw => fsu.fs.delete(new HPath(root, cw.dirName), true))
-        throw new java.util.ConcurrentModificationException(
-          s"lost the commit race on Delta table $path at version $v — " +
-            s"re-run the ${opName.toLowerCase} against the fresh snapshot")
-    }
-    postCommit(v)
-    v
+      })
   }
 
   /** UPDATE ... SET on the FOREIGN table, merge-on-read: rows matching
@@ -777,84 +655,18 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       }
     }
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def obj() = mapper.createObjectNode()
-    val ci = obj()
-    val cin = ci.putObject("commitInfo")
-    cin.put("timestamp", now)
-    ictFor(cur, now).foreach(v => cin.put("inCommitTimestamp", v): Unit)
-    cin.put("operation", "RESTORE")
-    cin.putObject("operationParameters").put("version", version)
-    cin.put("engineInfo", "graft-foreign-delta-writer")
-    lines += mapper.writeValueAsString(ci)
-    if (!sameMeta) {
-      val md = obj()
-      val mdn = md.putObject("metaData")
-      mdn.put("id", if (cur.tableId.nonEmpty) cur.tableId else UUID.randomUUID().toString)
-      val fmt = mdn.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdn.put("schemaString", old.schema.json)
-      val pcArr = mdn.putArray("partitionColumns")
-      old.partitionColumns.foreach(pcArr.add)
-      val cfg = mdn.putObject("configuration")
-      old.configuration.foreach { case (k, v) => cfg.put(k, v) }
-      mdn.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-    }
-    removes.foreach { a =>
-      val rm = obj()
-      val rmn = rm.putObject("remove")
-      rmn.put("path", a.rawPath)
-      rmn.put("deletionTimestamp", now)
-      rmn.put("dataChange", true)
-      lines += mapper.writeValueAsString(rm)
-    }
-    readds.foreach { a =>
-      val ad = obj()
-      val adn = ad.putObject("add")
-      adn.put("path", a.rawPath)
-      val pvn = adn.putObject("partitionValues")
-      a.partitionValues.foreach {
-        case (k, Some(v)) => pvn.put(k, v): Unit
-        case (k, None) => pvn.putNull(k): Unit
-      }
-      adn.put("size", a.size)
-      adn.put("modificationTime", a.mtime)
-      adn.put("dataChange", true)
-      a.statsJson.foreach(adn.put("stats", _))
-      a.baseRowId.foreach(b => adn.put("baseRowId", b): Unit)
-      a.defaultRowCommitVersion.foreach(d =>
-        adn.put("defaultRowCommitVersion", d): Unit)
-      a.dv.foreach { d =>
-        val dvn = adn.putObject("deletionVector")
-        dvn.put("storageType", d.storageType)
-        dvn.put("pathOrInlineDv", d.pathOrInlineDv)
-        d.offset.foreach(o => dvn.put("offset", o): Unit)
-        dvn.put("sizeInBytes", d.sizeInBytes)
-        dvn.put("cardinality", d.cardinality)
-      }
-      lines += mapper.writeValueAsString(ad)
-    }
-    val v = cur.version + 1
+    val lines = Seq(commitInfoLine(cur, now, "RESTORE", Seq("version" -> version))) ++
+      (if (sameMeta) Nil else Seq(metaDataLine(cur, old.schema.json,
+        old.partitionColumns, old.configuration, now))) ++
+      removes.map(DeltaActions.remove(_, now, dataChange = true)) ++
+      readds.map(DeltaActions.add(_, dataChange = true))
     // RESTORE's footprint is every file live at its snapshot plus every
     // file it resurrects: any remove-bearing winner conflicts (a restore
     // over a concurrent mutation would silently undo it), while pure
     // appends retry — the re-run's fresh diff then removes the appended
     // files too, which IS what "restore to version N" means serially
-    attemptFootprint = Some((cur.version,
-      cur.adds.map(_.rawPath).toSet ++ readds.map(_.rawPath)))
-    onBeforeCommit()
-    try fsu.writeStringAtomicNew(logPath(v), lines.mkString("\n"))
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"lost the commit race on Delta table $path at version $v — " +
-            "re-run the restore against the fresh snapshot")
-    }
-    postCommit(v)
-    v
+    claim(cur, cur.adds.map(_.rawPath).toSet ++ readds.map(_.rawPath), lines,
+      "re-run the restore against the fresh snapshot")
   }
 
   /** OPTIMIZE for the foreign table: bin-packing compaction + DV purge.
@@ -1033,89 +845,22 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       statsAllow = statsAllowOf(s.configuration, s.schema, phys.physNameOf))
 
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def obj() = mapper.createObjectNode()
-    val ci = obj()
-    val cin = ci.putObject("commitInfo")
-    cin.put("timestamp", now)
-    ictFor(s, now).foreach(v => cin.put("inCommitTimestamp", v): Unit)
-    cin.put("operation", "OPTIMIZE")
-    val opn = cin.putObject("operationParameters")
-    if (clusterPhys.nonEmpty)
-      opn.put("zOrderBy",
-        mapper.writeValueAsString(clusterPhys.toArray)): Unit
-    cin.put("engineInfo", "graft-foreign-delta-writer")
-    lines += mapper.writeValueAsString(ci)
-    // first materialization on this table: record the column names so
-    // every reader (this one included) knows where the persisted ids live
-    if (optCfgDelta.nonEmpty) {
-      val md = obj()
-      val mdn = md.putObject("metaData")
-      mdn.put("id", if (s.tableId.nonEmpty) s.tableId else UUID.randomUUID().toString)
-      val fmt = mdn.putObject("format")
-      fmt.put("provider", "parquet")
-      fmt.putObject("options")
-      mdn.put("schemaString", s.schema.json)
-      val pcArr = mdn.putArray("partitionColumns")
-      s.partitionColumns.foreach(pcArr.add)
-      val cfg = mdn.putObject("configuration")
-      (s.configuration ++ optCfgDelta).foreach { case (k, cv) => cfg.put(k, cv) }
-      mdn.put("createdTime", now)
-      lines += mapper.writeValueAsString(md)
-    }
-    doomed.foreach { a =>
-      val rm = obj()
-      val rmn = rm.putObject("remove")
-      rmn.put("path", a.rawPath)
-      rmn.put("deletionTimestamp", now)
-      rmn.put("dataChange", false)
-      lines += mapper.writeValueAsString(rm)
-    }
-    val v = s.version + 1
-    // the compacted adds still take fresh disjoint baseRowId ranges above
-    // the high-water mark (every rt add must carry one) — the materialized
-    // columns inside the files outrank them, preserving original identity
-    var hwmRt = if (rowTracking) rowIdHighWaterMark(s) else 0L
-    w.parts.foreach { case (rel, size, mtime) =>
-      val ad = obj()
-      val adn = ad.putObject("add")
-      adn.put("path",
-        new java.net.URI(null, null, s"${w.dirName}/$rel", null).toASCIIString)
-      val pvn = adn.putObject("partitionValues")
-      w.partValues(rel).foreach {
-        case (k, Some(v)) => pvn.put(k, v): Unit
-        case (k, None) => pvn.putNull(k): Unit
-      }
-      adn.put("size", size)
-      adn.put("modificationTime", mtime)
-      adn.put("dataChange", false)
-      w.statsByFile.get(rel).foreach(adn.put("stats", _))
-      if (rowTracking) {
-        val n = w.statsByFile.get(rel)
-          .flatMap(sj => Option(mapper.readTree(sj).get("numRecords"))
-            .map(_.asLong()))
-          .getOrElse(refuse(
-            s"row tracking needs a numRecords stat for $rel to assign ids"))
-        adn.put("baseRowId", hwmRt + 1)
-        adn.put("defaultRowCommitVersion", v)
-        hwmRt += n
-      }
-      lines += mapper.writeValueAsString(ad)
-    }
-    if (rowTracking && w.parts.nonEmpty) lines += rowTrackingDomainLine(hwmRt)
-    attemptFootprint = Some((s.version, doomed.map(_.rawPath).toSet))
-    onBeforeCommit()
-    try fsu.writeStringAtomicNew(logPath(v), lines.mkString("\n"))
-    catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"lost the commit race on Delta table $path at version $v — " +
-            "re-run OPTIMIZE against the fresh snapshot (the staged " +
-            s"rewrite dir ${w.dirName} ages out via vacuum)")
-    }
-    postCommit(v)
-    v
+    val lines = Seq(commitInfoLine(s, now, "OPTIMIZE",
+        if (clusterPhys.isEmpty) Nil
+        else Seq("zOrderBy" -> mapper.writeValueAsString(clusterPhys.toArray)))) ++
+      // first materialization on this table: record the column names so
+      // every reader (this one included) knows where the persisted ids live
+      (if (optCfgDelta.isEmpty) Nil else Seq(metaDataLine(s, s.schema.json,
+        s.partitionColumns, s.configuration ++ optCfgDelta, now))) ++
+      doomed.map(DeltaActions.remove(_, now, dataChange = false)) ++
+      // the compacted adds still take fresh disjoint baseRowId ranges above
+      // the high-water mark (every rt add must carry one) — the
+      // materialized columns inside the files outrank them, preserving
+      // original identity
+      freshAddLines(s, s.version + 1, w, dataChange = false)
+    claim(s, doomed.map(_.rawPath).toSet, lines,
+      "re-run OPTIMIZE against the fresh snapshot (the staged " +
+        s"rewrite dir ${w.dirName} ages out via vacuum)")
   }
 
   // --------------------------------------------------------------- internals
@@ -1181,8 +926,10 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     sys.error("unreachable")
   }
 
-  private def refuse(msg: String): Nothing =
-    throw new UnsupportedOperationException(
+  private def refuse(msg: String): Nothing = throw refusal(msg)
+
+  private def refusal(msg: String): UnsupportedOperationException =
+    new UnsupportedOperationException(
       s"cannot write external Delta table $path: $msg")
 
   /** Physical clustering column names from the table's liquid-clustering
@@ -1212,14 +959,79 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
         .map(_.asLong()))
       .getOrElse(-1L)
 
-  /** The domainMetadata action advancing the row-id high-water mark. */
-  private def rowTrackingDomainLine(hwm: Long): String = {
-    val dm = mapper.createObjectNode()
-    val dn = dm.putObject("domainMetadata")
-    dn.put("domain", "delta.rowTracking")
-    dn.put("configuration", s"""{"rowIdHighWaterMark":$hwm}""")
-    dn.put("removed", false)
-    mapper.writeValueAsString(dm)
+  /** add lines for the files `w` wrote, committed as version `v` over
+    * snapshot `s`. Row tracking ACTIVE (the feature listed obliges every
+    * writer): the files take disjoint baseRowId ranges above the table's
+    * high-water mark (their numRecords stats give the per-file counts),
+    * and a trailing domainMetadata line advances the mark in the same
+    * commit. */
+  private def freshAddLines(
+      s: DeltaTable.Snapshot, v: Long, w: Written, dataChange: Boolean): Seq[String] = {
+    val rowTracking = s.writerFeatures.contains("rowTracking")
+    var hwm = rowIdHighWaterMark(s)
+    val adds = w.parts.map { case (rel, size, mtime) =>
+      val stats = w.statsByFile.get(rel)
+      val baseRowId = if (!rowTracking) None else {
+        val n = stats.flatMap(sj => Option(mapper.readTree(sj).get("numRecords"))
+            .map(_.asLong()))
+          .getOrElse(refuse(
+            s"row tracking needs a numRecords stat for $rel to assign ids"))
+        val base = hwm + 1
+        hwm += n
+        Some(base)
+      }
+      DeltaActions.add(DeltaTable.Add(w.uriOf(rel), size, mtime,
+        w.partValues(rel).toMap, stats, None, baseRowId, baseRowId.map(_ => v)),
+        dataChange)
+    }
+    if (!rowTracking || w.parts.isEmpty) adds
+    else adds :+ DeltaActions.domainMetadata(
+      "delta.rowTracking", s"""{"rowIdHighWaterMark":$hwm}""")
+  }
+
+  private def commitInfoLine(
+      s: DeltaTable.Snapshot, now: Long, operation: String,
+      params: Seq[(String, Any)] = Nil): String =
+    DeltaActions.commitInfo(now, ictFor(s, now), operation, params,
+      ForeignDeltaTable.EngineInfo)
+
+  /** metaData line under the table's own id (a fresh one when the log
+    * never recorded any). */
+  private def metaDataLine(
+      s: DeltaTable.Snapshot, schemaJson: String, partitionColumns: Seq[String],
+      configuration: Map[String, String], now: Long): String =
+    DeltaActions.metaData(tableIdOf(s), schemaJson, partitionColumns, configuration, now)
+
+  private def tableIdOf(s: DeltaTable.Snapshot): String =
+    if (s.tableId.nonEmpty) s.tableId else UUID.randomUUID().toString
+
+  /** Put-if-absent claim of commit `v`: false when another writer already
+    * published that version. */
+  private def tryClaim(v: Long, lines: Seq[String]): Boolean =
+    try { fsu.writeStringAtomicNew(logPath(v), lines.mkString("\n")); true }
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+           _: java.nio.file.FileAlreadyExistsException => false
+    }
+
+  /** Publish a single-attempt mutation over snapshot `s` as version
+    * `s.version + 1`: records the attempt's footprint (the raw paths it
+    * removes / re-adds) for [[withConflictRetry]], claims the version, and
+    * on a lost race runs `cleanup` over the staged files no commit will
+    * reference, then aborts. Returns the committed version. */
+  private def claim(
+      s: DeltaTable.Snapshot, touched: Set[String], lines: Seq[String],
+      retryHint: String, cleanup: => Unit = ()): Long = {
+    val v = s.version + 1
+    attemptFootprint = Some((s.version, touched))
+    onBeforeCommit()
+    if (!tryClaim(v, lines)) {
+      cleanup
+      throw new java.util.ConcurrentModificationException(
+        s"lost the commit race on Delta table $path at version $v — $retryHint")
+    }
+    postCommit(v)
+    v
   }
 
   /** The in-commit timestamp this commit must carry when the table has the
@@ -1360,32 +1172,8 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     * logically-named DataFrame, the physical write schema (parquet field
     * ids in id mode), physical partition column names. Identity when the
     * table is unmapped. */
-  private final class PhysPlan(s: DeltaTable.Snapshot, outSchema: StructType) {
-    private val cmMode = s.configuration.getOrElse("delta.columnMapping.mode", "none")
-    val mapped: Boolean = cmMode != "none"
-    private val idMode = cmMode == "id"
-    private val PhysKey = "delta.columnMapping.physicalName"
-    private val IdKey = "delta.columnMapping.id"
-    private def physName(f: StructField): String =
-      if (!mapped) f.name
-      else if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey)
-      else refuse(s"column-mapped table: field ${f.name} has no $PhysKey metadata")
-    private def fieldMeta(f: StructField): Metadata =
-      if (!idMode) Metadata.empty
-      else if (f.metadata.contains(IdKey)) new MetadataBuilder()
-        .putLong("parquet.field.id", f.metadata.getLong(IdKey)).build()
-      else refuse(s"id-mapped table: field ${f.name} has no $IdKey metadata")
-    private def physField(f: StructField): StructField =
-      StructField(physName(f), physType(f.dataType), f.nullable, fieldMeta(f))
-    private def physType(dt: DataType): DataType =
-      if (!mapped) dt
-      else dt match {
-        case st: StructType => StructType(st.fields.map(physField))
-        case a: ArrayType => a.copy(elementType = physType(a.elementType))
-        case m: MapType =>
-          m.copy(keyType = physType(m.keyType), valueType = physType(m.valueType))
-        case other => other
-      }
+  private final class PhysPlan(s: DeltaTable.Snapshot, outSchema: StructType)
+      extends DeltaTable.ColumnMapping(s.configuration, "table", refusal) {
     val writeSchema: StructType =
       if (mapped) StructType(outSchema.fields.map(physField)) else outSchema
     val physPartCols: Seq[String] = s.partitionColumns.map(c =>
@@ -1397,7 +1185,7 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     /** id-mode writes need `spark.sql.parquet.fieldId.write.enabled`
       * during the parquet write — scoped there ([[writeFiles]]), never a
       * lasting session-conf mutation. */
-    val fieldIdWrite: Boolean = mapped && idMode
+    val fieldIdWrite: Boolean = idMode
     /** Physical (stats-key) name of a logical column — identity under no
       * mapping. */
     def physNameOf(logical: String): String =
@@ -1459,7 +1247,14 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       dirName: String,
       parts: Seq[(String, Long, Long)],
       partValues: String => Seq[(String, Option[String])],
-      statsByFile: Map[String, String])
+      statsByFile: Map[String, String]) {
+    /** Log path of one written file: log paths are percent-encoded
+      * relative URIs, and the multi-arg URI constructor encodes what the
+      * on-disk segment escaping produced (e.g. a literal '%' in an escaped
+      * partition value). */
+    def uriOf(rel: String): String =
+      new java.net.URI(null, null, s"$dirName/$rel", null).toASCIIString
+  }
 
   /** Restore-on-exit scope for a session SQL conf (the write-path flags
     * must not leak onto unrelated writes in the same session). */
@@ -1720,8 +1515,7 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
         val added = merged.fields.filterNot(f => byLower.contains(f.name.toLowerCase))
         if (added.isEmpty) (merged, Map.empty[String, String])
         else {
-          val IdKey = "delta.columnMapping.id"
-          val PhysKey = "delta.columnMapping.physicalName"
+          import DeltaTable.{IdKey, PhysKey}
           var nextId = s.configuration.get("delta.columnMapping.maxColumnId")
             .map(_.toLong).getOrElse(
               s.schema.fields.collect {
@@ -1788,10 +1582,6 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
           "advanced high-water mark could be derived from the written files' " +
           "stats or partition values — refusing to commit the batch")
     }
-    val dirName = w.dirName
-    val parts = w.parts
-    val partValuesOf = w.partValues
-    val statsByFile = w.statsByFile
 
     // OPTIMISTIC COMMIT with bounded retry (the delta-spark shape): the
     // data files above are written ONCE; losing the put-if-absent version
@@ -1851,107 +1641,28 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       txn.foreach { case (appId, tv) =>
         if (cur.txns.get(appId).exists(_ >= tv)) return cur.version
       }
-      val lines = scala.collection.mutable.ArrayBuffer[String]()
-      def obj() = mapper.createObjectNode()
-      val ci = obj()
-      val cin = ci.putObject("commitInfo")
-      cin.put("timestamp", now)
-      ictFor(cur, now).foreach(v => cin.put("inCommitTimestamp", v): Unit)
-      cin.put("operation", "WRITE")
-      cin.putObject("operationParameters")
-        .put("mode", if (overwrite) "Overwrite" else "Append")
-      cin.put("engineInfo", "graft-foreign-delta-writer")
-      lines += mapper.writeValueAsString(ci)
-      // SetTransaction rides the same commit as its data (commitInfo stays
-      // the FIRST line — the ICT fast-path reads only that far)
-      txn.foreach { case (appId, tv) =>
-        val tx = obj()
-        val txn2 = tx.putObject("txn")
-        txn2.put("appId", appId)
-        txn2.put("version", tv)
-        txn2.put("lastUpdated", now)
-        lines += mapper.writeValueAsString(tx)
-      }
       // a widening commit on a table without the feature lists it first:
       // the owner's delta.enableTypeWidening=true (vetted above) IS the
       // opt-in delta-spark would have stamped the protocol with
       val curHasTw = cur.writerFeatures.contains(TypeWidening.Feature) ||
         cur.writerFeatures.contains(TypeWidening.PreviewFeature)
-      if (twChangesNow.nonEmpty && !curHasTw)
-        lines += protocolUpgradeLine(cur, TypeWidening.Feature)
-      if (mergedFinal.json != cur.schema.json || configNow != cur.configuration) {
-        val md = obj()
-        val mdn = md.putObject("metaData")
-        mdn.put("id", if (cur.tableId.nonEmpty) cur.tableId else UUID.randomUUID().toString)
-        val fmt = mdn.putObject("format")
-        fmt.put("provider", "parquet")
-        fmt.putObject("options")
-        mdn.put("schemaString", mergedFinal.json)
-        val pcArr = mdn.putArray("partitionColumns")
-        partCols.foreach(pcArr.add)
-        val cfg = mdn.putObject("configuration")
-        configNow.foreach { case (k, v) => cfg.put(k, v) }
-        mdn.put("createdTime", now)
-        lines += mapper.writeValueAsString(md)
-      }
-      if (overwrite) {
-        // Add.rawPath is exactly what the foreign log recorded — emitting
-        // the identical string guarantees the remove cancels its add for
-        // every reader, percent-encoding included
-        snapAdds(cur).foreach { raw =>
-          val rm = obj()
-          val rmn = rm.putObject("remove")
-          rmn.put("path", raw)
-          rmn.put("deletionTimestamp", now)
-          rmn.put("dataChange", true)
-          lines += mapper.writeValueAsString(rm)
-        }
-      }
-      // row tracking ACTIVE (the feature listed obliges every writer):
-      // fresh files take disjoint baseRowId ranges above the table's
-      // high-water mark; the same commit advances the mark in the
-      // delta.rowTracking domain. Carried stats give the per-file counts.
-      val rowTracking = cur.writerFeatures.contains("rowTracking")
-      var hwm = rowIdHighWaterMark(cur)
-      parts.foreach { case (rel, size, mtime) =>
-        val ad = obj()
-        val adn = ad.putObject("add")
-        // log paths are percent-encoded relative URIs; the multi-arg URI
-        // constructor encodes what the on-disk segment escaping produced
-        // (e.g. a literal '%' in an escaped partition value)
-        adn.put("path",
-          new java.net.URI(null, null, s"$dirName/$rel", null).toASCIIString)
-        val pvn = adn.putObject("partitionValues")
-        partValuesOf(rel).foreach {
-          case (k, Some(v)) => pvn.put(k, v): Unit
-          case (k, None) => pvn.putNull(k): Unit
-        }
-        adn.put("size", size)
-        adn.put("modificationTime", mtime)
-        adn.put("dataChange", true)
-        statsByFile.get(rel).foreach(adn.put("stats", _))
-        if (rowTracking) {
-          val n = statsByFile.get(rel)
-            .flatMap(sj => Option(mapper.readTree(sj).get("numRecords"))
-              .map(_.asLong()))
-            .getOrElse(refuse(
-              s"row tracking needs a numRecords stat for $rel to assign ids"))
-          adn.put("baseRowId", hwm + 1)
-          adn.put("defaultRowCommitVersion", v)
-          hwm += n
-        }
-        lines += mapper.writeValueAsString(ad)
-      }
-      if (rowTracking && parts.nonEmpty)
-        lines += rowTrackingDomainLine(hwm)
-
-      val claimed =
-        try { fsu.writeStringAtomicNew(logPath(v), lines.mkString("\n")); true }
-        catch {
-          case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-               _: java.nio.file.FileAlreadyExistsException => false
-        }
-      if (claimed) {
+      val lines =
+        Seq(commitInfoLine(cur, now, "WRITE",
+          Seq("mode" -> (if (overwrite) "Overwrite" else "Append")))) ++
+        // SetTransaction rides the same commit as its data (commitInfo stays
+        // the FIRST line — the ICT fast-path reads only that far)
+        txn.map { case (appId, tv) => DeltaActions.txn(appId, tv, now) } ++
+        (if (twChangesNow.nonEmpty && !curHasTw)
+          Seq(protocolUpgradeLine(cur, TypeWidening.Feature)) else Nil) ++
+        (if (mergedFinal.json == cur.schema.json && configNow == cur.configuration) Nil
+        else Seq(metaDataLine(cur, mergedFinal.json, partCols, configNow, now))) ++
+        // Add.rawPath (and its deletion vector) is exactly what the foreign
+        // log recorded — emitting the identical add key guarantees the
+        // remove cancels its add for every reader, percent-encoding included
+        (if (overwrite) cur.adds.map(DeltaActions.remove(_, now, dataChange = true))
+        else Nil) ++
+        freshAddLines(cur, v, w, dataChange = true)
+      if (tryClaim(v, lines)) {
         postCommit(v)
         return v
       }
@@ -2173,6 +1884,22 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     deleted.map(_.getName)
   }
 
+  /** Post-commit bookkeeping, after `v`'s JSON is durably claimed: the
+    * version-checksum sidecar for EVERY commit (delta-spark writes one per
+    * commit; [[VersionChecksum]]), and the classic checkpoint at the
+    * owner's cadence. One snapshot reconstruction serves both — and since
+    * it replays the just-written commit, it doubles as a read-back check
+    * that the emitted actions parse. The crc is built FROM that replay, so
+    * its embedded metadata/protocol can never drift from the log. The
+    * cadence is the owner's `delta.checkpointInterval`, evaluated against
+    * the committing snapshot's config like delta-spark does. */
+  private def postCommit(v: Long): Unit = {
+    val cur = DeltaTable.snapshot(spark, path, versionAsOf = Some(v))
+    VersionChecksum.write(fsu, logDir, cur,
+      DeltaTable.commitInfoIct(fsu, logPath(v)))
+    if (v % DeltaLogMirror.checkpointEvery(cur.configuration) == 0) writeCheckpoint(v, cur)
+  }
+
   /** Classic parquet checkpoint + `_last_checkpoint` at version `v`, so a
     * long-continued migration never forces readers (delta-spark, delta-rs,
     * [[DeltaTable]] itself) to replay an unboundedly growing JSON tail —
@@ -2183,32 +1910,6 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     * tombstones (PROTOCOL.md requires them in checkpoints — other engines'
     * VACUUM depends on them; expiry honors
     * `delta.deletedFileRetentionDuration`, default one week). */
-  /** The owner's chosen checkpoint cadence — delta-spark's
-    * `delta.checkpointInterval` table property (default 10). Evaluated
-    * against the committing snapshot's config like delta-spark does.
-    * TOLERANT parse: this runs AFTER the commit JSON is claimed, so a
-    * malformed value another tool wrote must fall back to the default,
-    * never make a durably-committed write appear to fail (the caller
-    * would retry and duplicate rows). */
-  private def checkpointEvery(config: Map[String, String]): Long =
-    config.get("delta.checkpointInterval")
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption).filter(_ > 0)
-      .getOrElse(DeltaLogMirror.CheckpointInterval)
-
-  /** Post-commit bookkeeping, after `v`'s JSON is durably claimed: the
-    * version-checksum sidecar for EVERY commit (delta-spark writes one per
-    * commit; [[VersionChecksum]]), and the classic checkpoint at the
-    * owner's cadence. One snapshot reconstruction serves both — and since
-    * it replays the just-written commit, it doubles as a read-back check
-    * that the emitted actions parse. The crc is built FROM that replay, so
-    * its embedded metadata/protocol can never drift from the log. */
-  private def postCommit(v: Long): Unit = {
-    val cur = DeltaTable.snapshot(spark, path, versionAsOf = Some(v))
-    VersionChecksum.write(fsu, logDir, cur,
-      DeltaTable.commitInfoIct(fsu, logPath(v)))
-    if (v % checkpointEvery(cur.configuration) == 0) writeCheckpoint(v, cur)
-  }
-
   private def writeCheckpoint(v: Long, s: DeltaTable.Snapshot): Unit = {
     import org.apache.spark.sql.Row
     val now = System.currentTimeMillis()
@@ -2220,8 +1921,7 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
         emptyTo(s.readerFeatures), emptyTo(s.writerFeatures)),
       null, null, null, null, null)
     val metaRow = Row(null,
-      Row(if (s.tableId.nonEmpty) s.tableId else UUID.randomUUID().toString,
-        null, null, Row("parquet", Map.empty[String, String]),
+      Row(tableIdOf(s), null, null, Row("parquet", Map.empty[String, String]),
         s.schema.json, s.partitionColumns, s.configuration, now),
       null, null, null, null)
     val addRows = s.adds.map { a =>
@@ -2263,15 +1963,15 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       DeltaLogMirror.publishCheckpoint(spark, fsu, logDir, v,
         Seq(protoRow, metaRow) ++ addRows ++ rmRows ++ dmRows ++ txnRows,
         ForeignDeltaTable.checkpointSchema,
-        partSize = s.configuration.get("delta.checkpoint.partSize")
-          .flatMap(x => scala.util.Try(x.trim.toLong).toOption))
+        partSize = DeltaLogMirror.positiveLongProp(
+          s.configuration, "delta.checkpoint.partSize"))
   }
-
-  private def snapAdds(s: DeltaTable.Snapshot): Seq[String] =
-    s.adds.map(_.rawPath)
 }
 
 object ForeignDeltaTable {
+  /** `commitInfo.engineInfo` of every commit this writer publishes. */
+  private val EngineInfo = "graft-foreign-delta-writer"
+
   /** SHALLOW CLONE (the delta-spark CLONE shape): creates a NEW table at
     * `destPath` whose v0 references the SOURCE's current data files by
     * fully-qualified absolute URI — zero data copied; the clone then
@@ -2292,7 +1992,6 @@ object ForeignDeltaTable {
     * stats exactly like the source. */
   def shallowClone(
       spark: SparkSession, sourcePath: String, destPath: String): Long = {
-    import VersionedTable.mapper
     val s = DeltaTable.snapshot(spark, sourcePath)
     val destFsu = new Fs(spark, destPath)
     if (destFsu.exists(new HPath(destPath, "_delta_log")))
@@ -2303,83 +2002,26 @@ object ForeignDeltaTable {
     def qualify(p: HPath): String =
       srcFsu.fs.makeQualified(p).toUri.toASCIIString
     val now = System.currentTimeMillis()
-    val lines = scala.collection.mutable.ArrayBuffer[String]()
-    def obj() = mapper.createObjectNode()
-    val ci = obj()
-    val cin = ci.putObject("commitInfo")
-    cin.put("timestamp", now)
-    cin.put("operation", "CLONE")
-    val op = cin.putObject("operationParameters")
-    op.put("source", sourcePath)
-    op.put("sourceVersion", s.version)
-    cin.put("engineInfo", "graft-foreign-delta-writer")
-    lines += mapper.writeValueAsString(ci)
-    val pr = obj()
-    val prn = pr.putObject("protocol")
-    prn.put("minReaderVersion", s.minReaderVersion)
-    prn.put("minWriterVersion", s.minWriterVersion)
-    if (s.minReaderVersion >= 3) {
-      val rf = prn.putArray("readerFeatures")
-      s.readerFeatures.foreach(rf.add)
-    }
-    if (s.minWriterVersion >= 7) {
-      val wf = prn.putArray("writerFeatures")
-      s.writerFeatures.foreach(wf.add)
-    }
-    lines += mapper.writeValueAsString(pr)
-    val md = obj()
-    val mdn = md.putObject("metaData")
-    mdn.put("id", UUID.randomUUID().toString) // a clone is a NEW table
-    val fmt = mdn.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    mdn.put("schemaString", s.schema.json)
-    val pcArr = mdn.putArray("partitionColumns")
-    s.partitionColumns.foreach(pcArr.add)
-    val cfg = mdn.putObject("configuration")
-    s.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    mdn.put("createdTime", now)
-    lines += mapper.writeValueAsString(md)
-    s.domainMetadata.toSeq.sortBy(_._1).foreach { case (domain, conf) =>
-      val dm = obj()
-      val dmn = dm.putObject("domainMetadata")
-      dmn.put("domain", domain)
-      dmn.put("configuration", conf)
-      dmn.put("removed", false)
-      lines += mapper.writeValueAsString(dm)
-    }
-    s.adds.foreach { a =>
-      val ad = obj()
-      val adn = ad.putObject("add")
-      adn.put("path", qualify(DeltaTable.resolvePath(srcRoot, a.rawPath)))
-      val pvn = adn.putObject("partitionValues")
-      a.partitionValues.foreach {
-        case (k, Some(v)) => pvn.put(k, v): Unit
-        case (k, None) => pvn.putNull(k): Unit
+    val lines =
+      Seq(DeltaActions.commitInfo(now, None, "CLONE",
+          Seq("source" -> sourcePath, "sourceVersion" -> s.version), EngineInfo),
+        DeltaActions.protocol(s.minReaderVersion, s.minWriterVersion,
+          s.readerFeatures, s.writerFeatures),
+        // a clone is a NEW table
+        DeltaActions.metaData(UUID.randomUUID().toString, s.schema.json,
+          s.partitionColumns, s.configuration, now)) ++
+      s.domainMetadata.toSeq.sortBy(_._1).map { case (domain, conf) =>
+        DeltaActions.domainMetadata(domain, conf)
+      } ++
+      s.adds.map { a =>
+        DeltaActions.add(a.copy(
+          rawPath = qualify(DeltaTable.resolvePath(srcRoot, a.rawPath)),
+          dv = a.dv.map(d =>
+            if (d.storageType != "u") d
+            else d.copy(storageType = "p", pathOrInlineDv =
+              qualify(DeletionVectors.uuidPath(srcRoot, d.pathOrInlineDv))))),
+          dataChange = true)
       }
-      adn.put("size", a.size)
-      adn.put("modificationTime", a.mtime)
-      adn.put("dataChange", true)
-      a.statsJson.foreach(adn.put("stats", _))
-      a.baseRowId.foreach(b => adn.put("baseRowId", b): Unit)
-      a.defaultRowCommitVersion.foreach(d =>
-        adn.put("defaultRowCommitVersion", d): Unit)
-      a.dv.foreach { d =>
-        val dvn = adn.putObject("deletionVector")
-        if (d.storageType == "u") {
-          dvn.put("storageType", "p")
-          dvn.put("pathOrInlineDv",
-            qualify(DeletionVectors.uuidPath(srcRoot, d.pathOrInlineDv)))
-        } else {
-          dvn.put("storageType", d.storageType)
-          dvn.put("pathOrInlineDv", d.pathOrInlineDv)
-        }
-        d.offset.foreach(o => dvn.put("offset", o): Unit)
-        dvn.put("sizeInBytes", d.sizeInBytes)
-        dvn.put("cardinality", d.cardinality)
-      }
-      lines += mapper.writeValueAsString(ad)
-    }
     destFsu.mkdirs(new HPath(destPath, "_delta_log"))
     destFsu.writeStringAtomicNew(
       new HPath(new HPath(destPath, "_delta_log"), f"${0L}%020d.json"),

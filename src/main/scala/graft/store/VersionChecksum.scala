@@ -57,25 +57,10 @@ private[graft] object VersionChecksum {
         m.put("domain", d); m.put("configuration", cfg); m.put("removed", false): Unit
       }
     }
-    val md = o.putObject("metadata")
-    md.put("id", s.tableId)
-    val fmt = md.putObject("format")
-    fmt.put("provider", "parquet")
-    fmt.putObject("options")
-    md.put("schemaString", s.schema.json)
-    val pc = md.putArray("partitionColumns")
-    s.partitionColumns.foreach(pc.add)
-    val cfg = md.putObject("configuration")
-    s.configuration.foreach { case (k, v) => cfg.put(k, v) }
-    val pr = o.putObject("protocol")
-    pr.put("minReaderVersion", s.minReaderVersion)
-    pr.put("minWriterVersion", s.minWriterVersion)
-    if (s.minReaderVersion >= 3) {
-      val rf = pr.putArray("readerFeatures"); s.readerFeatures.foreach(rf.add)
-    }
-    if (s.minWriterVersion >= 7) {
-      val wf = pr.putArray("writerFeatures"); s.writerFeatures.foreach(wf.add)
-    }
+    DeltaActions.fillMetadata(o.putObject("metadata"), s.tableId, s.schema.json,
+      s.partitionColumns, s.configuration)
+    DeltaActions.putProtocol(o, s.minReaderVersion, s.minWriterVersion,
+      s.readerFeatures, s.writerFeatures)
     mapper.writeValueAsString(o)
   }
 
