@@ -286,7 +286,10 @@ final class DeltaLogMirror(
         state.copy(version = v, schemaJson = fb.schemaJson, config = fb.properties)
       case None => state.copy(version = v) // heal gap: no-op commit
       case Some(man) =>
-        if (v == 0L || mirSchemaJson != state.schemaJson || man.properties != state.config)
+        // compared as mirrored: a cold replay's config already carries the
+        // translated CDF key the raw manifest properties lack
+        if (v == 0L || mirSchemaJson != state.schemaJson ||
+            deltaConfig(man.properties) != deltaConfig(state.config))
           emitMetaData(mirSchemaJson, man.properties)
         // manifest DV entries → Delta descriptors ("p" storage: graft DV
         // container files use the protocol's exact on-disk block layout, so

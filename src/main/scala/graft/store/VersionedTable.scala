@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -169,6 +170,43 @@ final class VersionedTable(spark: SparkSession, val path: String)
   def readVersion(version: Long): DataFrame = {
     val m = readManifest(version)
     scanDirs(m.dirs, DataType.fromJson(m.schemaJson).asInstanceOf[StructType])
+  }
+
+  /** `(COUNT(*), MAX(column))` of the current version answered from the
+    * manifest's per-dir stats, with no Spark job, the max boxed as the
+    * aggregate's `Row` returns it (honouring
+    * `spark.sql.datetime.java8API.enabled`). None — run the aggregate —
+    * unless every live dir has stats and no deletion vector, and the column
+    * is integral or a timestamp of the same type in every dir. Timestamp
+    * maxima before the epoch also answer None: the row-side conversion
+    * rebases ancient calendars, which the normalized stat does not undo. */
+  private[graft] def countMaxFromStats(column: String): Option[(Long, Any)] = {
+    val m = readManifest(requireVersion)
+    val dt = DataType.fromJson(m.schemaJson).asInstanceOf[StructType]
+      .find(_.name == column).map(_.dataType)
+      .filter(Seq(ByteType, ShortType, IntegerType, LongType, TimestampType).contains)
+      .getOrElse(return None)
+    val perDir = m.dirs.map { d =>
+      for {
+        st <- d.stats if d.dv.isEmpty
+        f <- DataType.fromJson(d.schemaJson).asInstanceOf[StructType].find(_.name == column)
+        if f.dataType == dt
+        cs <- st.cols.get(column) if cs.max.isDefined || cs.nullCount == st.rows
+      } yield (st.rows, cs.max.map(_.asInstanceOf[Long]))
+    }
+    if (perDir.exists(_.isEmpty)) return None
+    val boxed: Option[Any] = (dt, perDir.flatten.flatMap(_._2).maxOption) match {
+      case (_, None) => Some(null)
+      case (ByteType, Some(v)) => Some(java.lang.Byte.valueOf(v.toByte))
+      case (ShortType, Some(v)) => Some(java.lang.Short.valueOf(v.toShort))
+      case (IntegerType, Some(v)) => Some(java.lang.Integer.valueOf(v.toInt))
+      case (LongType, Some(v)) => Some(java.lang.Long.valueOf(v))
+      case (_, Some(v)) if v >= 0 => // TimestampType, micros since the epoch
+        Some(if (spark.conf.get("spark.sql.datetime.java8API.enabled", "false").toBoolean)
+          DateTimeUtils.microsToInstant(v) else DateTimeUtils.toJavaTimestamp(v))
+      case _ => None
+    }
+    boxed.map(perDir.flatten.map(_._1).sum -> _)
   }
 
   /** Time travel by wall clock (Delta's `timestampAsOf`): the newest still-
