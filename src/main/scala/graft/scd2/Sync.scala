@@ -340,10 +340,12 @@ final class Synchronizer(
     val ts = nowTs
     // the loaded-row count rides the write as an Observation — no re-scan
     val obs = org.apache.spark.sql.Observation()
-    val proj = Projection.withSystemCols(
-      srcProjected, isDeleted = false, isFullLoad = true, ts = lit(ts))
-      .observe(obs, count(lit(1)).as("n"))
     val v = labeled("full-load: history write") {
+      // resolving the source (a file source's schema inference) is a job
+      // of this step too
+      val proj = Projection.withSystemCols(
+        srcProjected, isDeleted = false, isFullLoad = true, ts = lit(ts))
+        .observe(obs, count(lit(1)).as("n"))
       if (overwriteTarget) dest.delta.overwrite(proj)
       else dest.delta.append(proj, cfg.allowSchemaDrift)
     }
@@ -435,9 +437,10 @@ final class Synchronizer(
 
     val dc = targetDelta.get
     // ONE resolved load read for steps 1–3: a file source is listed and its
-    // schema inferred once per sync, not once per step. The state probe
-    // and the dirty re-probe keep reading the source afresh.
-    val load = readSource("sql2delta")
+    // schema inferred once per sync, not once per step, under step 1's
+    // label. The state probe and the dirty re-probe keep reading the
+    // source afresh.
+    val load = labeled("step1: pk+ts snapshot write")(readSource("sql2delta"))
     val projected = Projection.select(load, cols, cfg, pushedCols)
 
     // step 1: pk+delta snapshot of the source (db_to_delta.py:575-579,862-890)

@@ -433,8 +433,11 @@ final class VersionedTable(spark: SparkSession, val path: String)
     scans.reduce(_.unionByName(_))
   }
 
+  /** An empty LocalRelation, not an RDD scan: Catalyst sees it is empty and
+    * prunes the joins and union branches that read it. An Observation on
+    * it still fires (CollectMetrics is never pruned). */
   private def emptyDf(s: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), s)
 
   /** Project/cast df onto `target` schema; missing columns become NULL
     * (delete tombstones and drift both need this; nullability always relaxed,

@@ -56,7 +56,7 @@ package graft.streaming {
     private val cases = Seq(
       new Case("dedupIngest", Seq("dest", "fp"), () => Seq(
           Seq((1L, "one text"), (2L, "one  TEXT"), (3L, "two text")).toDF("doc_id", "text"),
-          Seq((4L, "two text"), (5L, "three text")).toDF("doc_id", "text")), 6,
+          Seq((4L, "two text"), (5L, "three text")).toDF("doc_id", "text")), 5,
         (src, sch, t, ck) => StreamingIngest.dedupIngest(spark, src, sch, "doc_id", "text",
           t("dest"), t("fp"), ck)),
       new Case("funnelIngest", Seq("state"), () => Seq(
