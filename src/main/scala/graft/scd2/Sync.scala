@@ -111,56 +111,85 @@ final class Synchronizer(
   // ------------------------------------------------------------ resolution
   // (reference write_init.py:144-167,262-286 make_writer "analysis phase")
 
-  val cols: Seq[ColInfo] = source.columns(spark)
-  val pkCols: Seq[ColInfo] = {
-    val declared = source.primaryKeys(spark).map(_.toLowerCase).toSet
-    cols.filter(c => declared(c.name.toLowerCase))
-  }
-  val deltaCol: Option[ColInfo] = cfg.deltaCol match {
-    case Some(name) => cols.find(_.name.equalsIgnoreCase(name)).orElse(
-      throw new IllegalArgumentException(s"delta column $name not in source"))
-    case None =>
-      // auto-detect: a generated row-start col, else the Postgres xid/xmin
-      // system column when the catalog surfaced one (reference
-      // write_init.py:222-251 uses xmin as the delta col for physical
-      // tables), else an identity col for append_inserts
-      // (reference write_init.py:144-167, db_to_delta.py:236-243)
-      cols.find(_.isRowStart)
-        // only when the xid double-cast applies: a user mapping of xid to a
-        // non-numeric type would make a lexicographic watermark (wrong)
-        .orElse(cols.find(c => c.sourceType.exists(_.equalsIgnoreCase("xid")) &&
-          Projection.targetType(c, cfg) == org.apache.spark.sql.types.LongType))
-        .orElse(
-          if (cfg.loadMode == LoadMode.AppendInserts && pkCols.size == 1 && pkCols.head.isIdentity)
-            Some(pkCols.head)
-          else None)
+  /** The source as resolved for one run: column discovery, the state
+    * probe and the load read share ONE resolution of it (a file source
+    * lists its files and infers its schema once per run). */
+  private final class Resolved(val src: graft.sources.Resolution) {
+    val cols: Seq[ColInfo] = src.columns
+    val pkCols: Seq[ColInfo] = {
+      val declared = source.primaryKeys(spark).map(_.toLowerCase).toSet
+      cols.filter(c => declared(c.name.toLowerCase))
+    }
+    val deltaCol: Option[ColInfo] = cfg.deltaCol match {
+      case Some(name) => cols.find(_.name.equalsIgnoreCase(name)).orElse(
+        throw new IllegalArgumentException(s"delta column $name not in source"))
+      case None =>
+        // auto-detect: a generated row-start col, else the Postgres xid/xmin
+        // system column when the catalog surfaced one (reference
+        // write_init.py:222-251 uses xmin as the delta col for physical
+        // tables), else an identity col for append_inserts
+        // (reference write_init.py:144-167, db_to_delta.py:236-243)
+        cols.find(_.isRowStart)
+          // only when the xid double-cast applies: a user mapping of xid to a
+          // non-numeric type would make a lexicographic watermark (wrong)
+          .orElse(cols.find(c => c.sourceType.exists(_.equalsIgnoreCase("xid")) &&
+            Projection.targetType(c, cfg) == org.apache.spark.sql.types.LongType))
+          .orElse(
+            if (cfg.loadMode == LoadMode.AppendInserts && pkCols.size == 1 && pkCols.head.isIdentity)
+              Some(pkCols.head)
+            else None)
+    }
+    /** The source with P1 pushed into its remote SQL when it supports that
+      * (JDBC): trims/caps/casts then run IN the source DB and converted
+      * bytes ship over the wire (reference db_to_delta.py:54-164). Columns
+      * fully converted source-side are only ALIASED by the Spark-side
+      * projection (re-applying trim/cap is not idempotent when a cap lands
+      * on whitespace); columns the dialect couldn't render stay fully
+      * Spark-side — either way results match the no-pushdown plan. */
+    val (effSource: graft.sources.Source, pushedCols: Set[String]) = source match {
+      case p: graft.sources.ProjectionPushdown if cfg.sourceSideProjection =>
+        p.pushedProjection(cols, cfg).getOrElse((source, Set.empty[String]))
+      case _ => (source, Set.empty[String])
+    }
+    /** The load read, before the transformation hook. */
+    lazy val load: DataFrame = if (effSource eq source) src.read else effSource.read(spark)
   }
 
+  @volatile private var resolved: Resolved = null
+
+  /** Resolves the source afresh; every [[execute]] starts here, so each
+    * run sees the source's current data. */
+  private def resolveSource(): Resolved = {
+    val r = labeled("source: resolve")(new Resolved(source.resolve(spark)))
+    resolved = r
+    r
+  }
+
+  /** The current run's resolution; resolved on first use when a caller
+    * inspects the writer before its first run. */
+  private def run: Resolved = Option(resolved).getOrElse(synchronized {
+    Option(resolved).getOrElse(resolveSource())
+  })
+
+  def cols: Seq[ColInfo] = run.cols
+  def pkCols: Seq[ColInfo] = run.pkCols
+  def deltaCol: Option[ColInfo] = run.deltaCol
+
   def targetName(c: ColInfo): String = cfg.getTargetName(c)
-  val targetPks: Seq[String] = pkCols.map(targetName)
-  val targetDelta: Option[String] = deltaCol.map(targetName)
+  def targetPks: Seq[String] = pkCols.map(targetName)
+  def targetDelta: Option[String] = deltaCol.map(targetName)
   /** (pks..., delta_col) — the shape of every snapshot table. The delta col
     * may BE a pk (identity-pk append_inserts) — dedupe. */
   private def pkd: Seq[String] = (targetPks ++ targetDelta.toSeq).distinct
 
-  /** The source with P1 pushed into its remote SQL when it supports that
-    * (JDBC): trims/caps/casts then run IN the source DB and converted
-    * bytes ship over the wire (reference db_to_delta.py:54-164). Columns
-    * fully converted source-side are only ALIASED by the Spark-side
-    * projection (re-applying trim/cap is not idempotent when a cap lands
-    * on whitespace); columns the dialect couldn't render stay fully
-    * Spark-side — either way results match the no-pushdown plan. */
-  private val (effSource: graft.sources.Source, pushedCols: Set[String]) = source match {
-    case p: graft.sources.ProjectionPushdown if cfg.sourceSideProjection =>
-      p.pushedProjection(cols, cfg).getOrElse((source, Set.empty[String]))
-    case _ => (source, Set.empty[String])
-  }
+  private def effSource: graft.sources.Source = run.effSource
+  private def pushedCols: Set[String] = run.pushedCols
 
   /** Source read with the per-stage transformation hook applied (reference
     * spark_reader.py:97,111-113 — stage "sql2delta" = table loads,
     * "source2py" = driver-side scalar probes). */
   private def readSource(stage: String): DataFrame =
-    cfg.transformationHook(effSource.read(spark), stage)
+    cfg.transformationHook(run.load, stage)
 
   private def srcProjected: DataFrame =
     Projection.select(readSource("sql2delta"), cols, cfg, pushedCols)
@@ -280,6 +309,7 @@ final class Synchronizer(
   def execute(): LoadResult = {
     dest.acquireLock()
     try {
+      resolveSource()
       val pkVersionBefore = dest.latestPkVersion.latestVersion
       val pkTsVersionBefore = dest.primaryKeysTs.latestVersion
       try {
@@ -341,8 +371,6 @@ final class Synchronizer(
     // the loaded-row count rides the write as an Observation — no re-scan
     val obs = org.apache.spark.sql.Observation()
     val v = labeled("full-load: history write") {
-      // resolving the source (a file source's schema inference) is a job
-      // of this step too
       val proj = Projection.withSystemCols(
         srcProjected, isDeleted = false, isFullLoad = true, ts = lit(ts))
         .observe(obs, count(lit(1)).as("n"))
@@ -386,20 +414,18 @@ final class Synchronizer(
     }
   }
 
-  /** A2: same pair against the source (reference load_infos.py:44-70).
-    * Computed over the hooked read so a row-filtering hook keeps change
-    * detection consistent with what the loads actually ingest; without a
-    * hook this is exactly Source.state's pushed-down aggregate. */
-  def sourceState(): SourceState = labeled("state: source (max, count)") {
+  /** A2: same pair against the source (reference load_infos.py:44-70),
+    * answered from the run's resolution. Computed over the hooked read so
+    * a row-filtering hook keeps change detection consistent with what the
+    * loads actually ingest; without a hook this is exactly Source.state's
+    * pushed-down aggregate. */
+  def sourceState(): SourceState = labeled("state: source (max, count)")(stateOf(run))
+
+  private def stateOf(r: Resolved): SourceState =
     if (cfg.transformationHook eq WriteConfig.noHook)
-      source.state(spark, Projection.sourceConvert(deltaCol.get, cfg))
-    else {
-      val row = readSource("source2py")
-        .agg(max(convertOrAlias(deltaCol.get)).as("m"),
-          count(lit(1)).as("c")).head()
-      SourceState(row.get(0), row.getLong(1))
-    }
-  }
+      r.src.state(Projection.sourceConvert(r.deltaCol.get, cfg))
+    else graft.sources.Resolution.stateOf(
+      cfg.transformationHook(r.load, "source2py"), convertOrAlias(r.deltaCol.get))
 
   /** The default delta algorithm, steps 1–4 (reference db_to_delta.py:483-692;
     * SURVEY.md §3.2), run as a step graph: each read-only probe runs beside
@@ -409,14 +435,21 @@ final class Synchronizer(
     *   - step 2's history append ∥ step 3's strange-pk probe, which reads
     *     only primary_keys_ts, the old latest_pk_version and delta_1;
     *   - step 3's history append ∥ step 4's latest_pk_version write ∥ the
-    *     delete probe, which reads step 4's INPUTS, not its output.
+    *     tombstone write, whose delete set reads step 4's INPUTS, not its
+    *     output. The tombstones are written as STAGED history files that
+    *     no reader sees, and their count rides the write as an
+    *     Observation;
+    *   - last, once that group has settled: the staged tombstones are
+    *     published as the history's next version when there are any, and
+    *     deleted otherwise.
     *
     * The history commits keep their order — delta_1 rows, then strange
-    * rows, then tombstones — because each waits for the previous one.
-    * latest_pk_version may now commit before the step-3 history append;
+    * rows, then tombstones — because each is published after the previous
+    * one. latest_pk_version may commit before the step-3 history append;
     * the rollback in [[execute]] restores it either way. Every overlapped
     * task settles before control leaves its group ([[beside]]), so no
-    * in-flight commit can land after the rollback restored its table. */
+    * in-flight commit can land after the rollback restored its table, and
+    * a run that fails before the publish deletes its staged tombstones. */
   def deltaLoad(): LoadResult = {
     // pre-checks ---------------------------------------------------------
     if (schemaDriftForcesFull()) return fullLoad(overwriteTarget = false)
@@ -436,10 +469,9 @@ final class Synchronizer(
     if (src.sameAs(local)) return LoadResult.NoLoad // short-circuit (db_to_delta.py:560-566)
 
     val dc = targetDelta.get
-    // ONE resolved load read for steps 1–3: a file source is listed and its
-    // schema inferred once per sync, not once per step, under step 1's
-    // label. The state probe and the dirty re-probe keep reading the
-    // source afresh.
+    // ONE load read for steps 1–3, from the run's resolution: a file
+    // source was listed and its schema inferred once, by resolveSource,
+    // for column discovery, the state probe and these steps alike.
     val load = labeled("step1: pk+ts snapshot write")(readSource("sql2delta"))
     val projected = Projection.select(load, cols, cfg, pushedCols)
 
@@ -487,11 +519,17 @@ final class Synchronizer(
         stageStrange(strange, local.deltaMax, projected)
       val upperBound = newWatermark.orElse(Option(local.deltaMax))
 
-      // step 3's history append ∥ step 4 ∥ the delete probe. The final count
-      // check's target count rides the step-4 write as an Observation
-      // (deletes only append history tombstones; the snapshot is unchanged
-      // afterwards).
-      val deleted = deletedPks(oldPkVersion, upperBound)
+      // step 3's history append ∥ step 4 ∥ the staged tombstone write
+      // (step 3.5, db_to_delta.py:620-629,749-859). The final count check's
+      // target count rides the step-4 write as an Observation (deletes only
+      // append history tombstones; the snapshot is unchanged afterwards).
+      // The tombstones' schema and clock are taken before the group starts:
+      // the history schema is settled by step 2's append, and their
+      // __timestamp follows delta_2's.
+      val obsDel = org.apache.spark.sql.Observation()
+      val tombstones = Projection.tombstones(deletedPks(oldPkVersion, upperBound),
+        dest.delta.schema, ts = lit(nowTs)).observe(obsDel, count(lit(1)).as("n"))
+      var staged: Option[graft.store.StagedWrite] = scala.None
       try {
         val step3 = async(strangeAppend.foreach { case (step, rows) =>
           labeled(step)(dest.delta.append(rows, cfg.allowSchemaDrift))
@@ -499,23 +537,26 @@ final class Synchronizer(
         val obsPk = org.apache.spark.sql.Observation()
         val step4 = async(labeled("step4: latest_pk write")(dest.latestPkVersion.overwrite(
           latestPkQuery(upperBound).observe(obsPk, count(lit(1)).as("n")))))
-        val deletes = beside(step3, step4)(labeled("step3.5: delete probe")(deleted.count()))
+        beside(step3, step4) {
+          staged = Some(labeled("step3.5: delete probe")(
+            dest.delta.stage(tombstones, cfg.allowSchemaDrift, overwrite = false)))
+        }
         val targetCount = obsPk.get("n").asInstanceOf[Long]
         failpoint("after_step3") // strange-row history appends committed
-        failpoint("after_step4") // latest_pk_version overwritten, deletes pending
+        failpoint("after_step4") // latest_pk_version overwritten, tombstones staged
 
-        // step 3.5: tombstones, the last commit (db_to_delta.py:620-629,749-859)
-        if (deletes > 0)
-          labeled("step3.5: tombstone append")(dest.delta.append(
-            Projection.tombstones(deleted, dest.delta.schema, ts = lit(nowTs)),
-            cfg.allowSchemaDrift))
+        // the tombstones, the last commit
+        val deletes = obsDel.get("n").asInstanceOf[Long]
+        if (deletes > 0) labeled("step3.5: tombstone publish")(staged.get.publish())
 
         // final count check; on mismatch re-probe the source — a mid-load
         // mutation is expected (dirty run), anything else warrants attention
         // (reference db_to_delta.py:641-658)
         val dirty = targetCount != src.count
         if (dirty) {
-          val fresh = sourceState()
+          // a fresh resolution: the source as it is NOW, not as this run read it
+          val fresh = labeled("state: source (max, count)")(
+            stateOf(new Resolved(source.resolve(spark))))
           dest.log.warn(
             s"count mismatch after load: target=$targetCount, source-at-start=${src.count}, " +
               s"source-now=${fresh.count}" +
@@ -523,7 +564,7 @@ final class Synchronizer(
             load = "delta")
         }
         LoadResult.DeltaLoad(inserts, strangeCount, deletes, dirty)
-      } finally deleted.unpersist(blocking = false)
+      } finally staged.foreach(_.discard())
     } finally strange.pks.unpersist()
   }
 
@@ -574,8 +615,8 @@ final class Synchronizer(
     * the delta column forward (e.g. restore-from-backup): (pk, delta_col)
     * tuples in the fresh snapshot that are neither in the old
     * latest_pk_version nor already captured by step 2 (pks vs delta_1).
-    * One bounded action collects at most `inlineJoinThreshold + 1` pks;
-    * with `noComplexEntriesLoad` none are collected. */
+    * One bounded job collects at most `inlineJoinThreshold + 1` pks
+    * ([[takeAtMost]]); with `noComplexEntriesLoad` none are collected. */
   private def probeStrange(oldPkVersion: Long): Strange = {
     val lastPk = dest.latestPkVersion.readVersion(oldPkVersion)
     val additional = antiOn(
@@ -587,10 +628,22 @@ final class Synchronizer(
     val threshold = math.min(math.max(cfg.inlineJoinThreshold, 0L), Int.MaxValue - 1L).toInt
     val inline =
       if (cfg.noComplexEntriesLoad) scala.None
-      else Some(labeled("step3: strange-pk probe")(pks.limit(threshold + 1).collect()))
+      else Some(labeled("step3: strange-pk probe")(takeAtMost(pks, threshold + 1)))
         .filter(_.length <= threshold)
     Strange(additional, pks, inline)
   }
+
+  /** At most `n` rows of `df` in ONE job: each partition yields its first
+    * `n`, and the first `n` of the collected rows are kept. (`limit(n).collect()`
+    * runs as Spark's incremental take, a second job whenever the first
+    * partition holds fewer than `n` rows.) */
+  private def takeAtMost(df: DataFrame, n: Int): Array[org.apache.spark.sql.Row] =
+    df.rdd.mapPartitions(_.take(n)).collect().take(n)
+
+  /** A violation of the pk-unique source contract the engine relies on. */
+  private def pkContractBroken(detail: String): Nothing =
+    throw new IllegalStateException(
+      s"source violates its primary-key contract on ${targetPks.mkString(", ")}: $detail")
 
   /** Step 3's staging writes. Small sets fetch full rows by joining the
     * source against the probed pks as a local relation (the Spark-native
@@ -609,6 +662,15 @@ final class Synchronizer(
         dest.delta2.overwriteEmpty(dest.delta1.schema)
         (0L, scala.None, scala.None)
       case Some(rows) =>
+        // the probed pks come from primary_keys_ts, one row per pk under
+        // the contract: a repeat means the source holds a duplicated pk
+        // (checked on the collected rows, so no job is added)
+        val distinctPks = rows.iterator.map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        }).toSet.size
+        if (distinctPks != rows.length)
+          pkContractBroken(s"${rows.length - distinctPks} repeated strange pk(s)")
         // inline path (J3): fetch ONLY the strange rows. A source that can
         // push a pk IN-list into its remote SQL (live JDBC — the
         // reference's OPENJSON literal-set join with its 7000-char chunk
@@ -633,8 +695,13 @@ final class Synchronizer(
         val obsD2 = org.apache.spark.sql.Observation()
         labeled("step3: inline delta_2 write")(
           dest.delta2.overwrite(full.observe(obsD2, count(lit(1)).as("n"))))
+        // at most one source row per probed pk under the contract; more
+        // would append duplicate history versions
+        val fetched = obsD2.get("n").asInstanceOf[Long]
+        if (fetched > rows.length)
+          pkContractBroken(s"$fetched source rows for ${rows.length} strange pk(s)")
         val append =
-          if (obsD2.get("n").asInstanceOf[Long] == 0) scala.None
+          if (fetched == 0) scala.None
           else Some("step3: inline history append" -> dest.delta2.read())
         (rows.length.toLong, append, scala.None)
       case scala.None =>
@@ -669,18 +736,16 @@ final class Synchronizer(
     * old latest_pk_version absent from the new one. The new snapshot's pk
     * set is delta_2 ∪ delta_1 ∪ primary_keys_ts≤bound ([[latestPkQuery]]:
     * its using-column anti joins only drop a pk another branch keeps, null
-    * pks included), so the set is computed from step 4's INPUTS and runs
-    * beside step 4's write. Chained anti joins, one relation each — an
-    * anti join against their union costs a wider pass. Persisted: the
-    * tombstone append reads the PROBED result instead of re-running the
-    * joins (guide §1.2: don't compute twice). */
+    * pks included), so the set is computed from step 4's INPUTS and its
+    * tombstones are written beside step 4's write. Chained anti joins, one
+    * relation each — an anti join against their union costs a wider pass.
+    * Read once, by the tombstone write itself. */
   private def deletedPks(oldPkVersion: Long, upperBound: Option[Any]): DataFrame = {
     val pks = targetPks.map(col)
     Seq(boundedSnapshot(upperBound), dest.delta1.read(), dest.delta2.read())
       .foldLeft(dest.latestPkVersion.readVersion(oldPkVersion).select(pks: _*)) { (left, right) =>
         antiOn(left, right.select(pks: _*), targetPks)
       }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** primary_keys_ts at or below step 4's bound: the snapshot branch of
@@ -779,18 +844,17 @@ final class Synchronizer(
   def restoreLastPk(): Boolean = labeled("restore: latest_pk from history") {
     recomputeLastPk() match {
       case Some(df) if !dest.latestPkVersion.exists =>
-        // the engine path (snapshot missing): ONE action — the row count
-        // rides the overwrite as an Observation. The previous isEmpty
-        // probe executed the entire restore window query once and the
-        // overwrite then executed it again (two full history passes at
-        // scale); on the empty corner (all rows deleted) the just-created
-        // table is dropped, restoring the not-exists state the old
-        // no-write path preserved.
+        // the engine path (snapshot missing): ONE pass over the restore
+        // window — the rows are written as a STAGED overwrite with their
+        // count on an Observation, and the table's v0 is published only
+        // when there are rows. On the empty corner (all rows deleted) the
+        // staged files are deleted, so no crash can leave an empty
+        // latest_pk_version where the not-exists state belongs.
         val obs = org.apache.spark.sql.Observation()
-        dest.latestPkVersion.overwrite(
-          df.observe(obs, count(lit(1)).as("n")))
-        if (obs.get("n").asInstanceOf[Long] > 0L) true
-        else { dest.latestPkVersion.dropTable(); false }
+        val staged = dest.latestPkVersion.stage(
+          df.observe(obs, count(lit(1)).as("n")), SchemaDrift.Full, overwrite = true)
+        try obs.get("n").asInstanceOf[Long] > 0L && { staged.publish(); true }
+        finally staged.discard()
       case Some(df) if !df.isEmpty => dest.latestPkVersion.overwrite(df); true
       case _ => false
     }

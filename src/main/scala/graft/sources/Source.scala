@@ -31,10 +31,39 @@ trait Source {
   /** (MAX(deltaCol), COUNT(*)) against the source — pushed down where the
     * source supports it; on parquet/JDBC this is one aggregate scan
     * (reference load_infos.py:44-70 / A2). */
-  def state(spark: SparkSession, deltaCol: Column): SourceState = {
-    val row = read(spark).agg(max(deltaCol).as("m"), count(lit(1)).as("c")).head()
+  def state(spark: SparkSession, deltaCol: Column): SourceState =
+    Resolution.stateOf(read(spark), deltaCol)
+
+  /** This source resolved for one sync run. By default its columns come
+    * from [[columns]], its state from [[state]] and its load read from
+    * one [[read]] made on first use. A source whose columns ARE its
+    * relation's schema resolves through [[Resolution.of]] instead,
+    * so column discovery, the state probe and the loads share one
+    * resolved relation (a file source infers its schema once per run). */
+  private[graft] def resolve(spark: SparkSession): Resolution =
+    new Resolution(columns(spark), state(spark, _), () => read(spark))
+}
+
+/** A [[Source]] as resolved for one sync run: its column metadata, its
+  * (MAX(deltaCol), COUNT(*)) probe and its load read. */
+private[graft] final class Resolution(
+    val columns: Seq[ColInfo],
+    probe: Column => SourceState,
+    relation: () => DataFrame) {
+  def state(deltaCol: Column): SourceState = probe(deltaCol)
+  lazy val read: DataFrame = relation()
+}
+
+private[graft] object Resolution {
+  /** (MAX(deltaCol), COUNT(*)) over `df` in one aggregate. */
+  def stateOf(df: DataFrame, deltaCol: Column): SourceState = {
+    val row = df.agg(max(deltaCol).as("m"), count(lit(1)).as("c")).head()
     SourceState(row.get(0), row.getLong(1))
   }
+
+  /** A resolution whose columns, state probe and loads all come from `df`. */
+  def of(df: DataFrame): Resolution =
+    new Resolution(ColInfo.fromSchema(df.schema), stateOf(df, _), () => df)
 }
 
 /** Sources that can run the P1 cast/trim/cap projection INSIDE the source
@@ -90,6 +119,8 @@ final class ParquetSource(
   def read(spark: SparkSession): DataFrame = transformationHook(spark.read.parquet(path))
   def columns(spark: SparkSession): Seq[ColInfo] = ColInfo.fromSchema(read(spark).schema)
   def primaryKeys(spark: SparkSession): Seq[String] = pks
+  override private[graft] def resolve(spark: SparkSession): Resolution =
+    Resolution.of(read(spark))
 }
 
 /** Any Spark file format as a source — parquet/csv/json/orc share one
@@ -111,6 +142,8 @@ final class FileSource(
   }
   def columns(spark: SparkSession): Seq[ColInfo] = ColInfo.fromSchema(read(spark).schema)
   def primaryKeys(spark: SparkSession): Seq[String] = pks
+  override private[graft] def resolve(spark: SparkSession): Resolution =
+    Resolution.of(read(spark))
 }
 
 /** An EXTERNAL Delta table as a source (reference reader/spark_reader.py:123-133
@@ -129,6 +162,8 @@ final class DeltaTableSource(
     transformationHook(graft.store.DeltaTable.read(spark, path, versionAsOf, timestampAsOf))
   def columns(spark: SparkSession): Seq[ColInfo] = ColInfo.fromSchema(read(spark).schema)
   def primaryKeys(spark: SparkSession): Seq[String] = pks
+  override private[graft] def resolve(spark: SparkSession): Resolution =
+    Resolution.of(read(spark))
 }
 
 /** Any DataFrame as a source — the query-as-source path
@@ -139,4 +174,5 @@ final class DataFrameSource(df: DataFrame, pks: Seq[String] = Nil) extends Sourc
   def read(spark: SparkSession): DataFrame = df
   def columns(spark: SparkSession): Seq[ColInfo] = ColInfo.fromSchema(df.schema)
   def primaryKeys(spark: SparkSession): Seq[String] = pks
+  override private[graft] def resolve(spark: SparkSession): Resolution = Resolution.of(df)
 }

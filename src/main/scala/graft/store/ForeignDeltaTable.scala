@@ -1389,6 +1389,22 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
   private def commitWrite(
       df: DataFrame, drift: SchemaDrift, overwrite: Boolean,
       txn: Option[(String, Long)] = None): Long = {
+    val staged = stageWrite(df, drift, overwrite)
+    staged.commit(staged.s, txn)
+  }
+
+  /** The files are written under `graft_data/` exactly as [[append]] /
+    * [[overwrite]] write them; publishing runs their commit — identity
+    * high-water mark, row-tracking ids, the `delta.appendOnly` check and
+    * the conflict-retry loop — against the snapshot current at publish
+    * time. */
+  private[graft] def stage(df: DataFrame, drift: SchemaDrift, overwrite: Boolean): StagedWrite =
+    stageWrite(df, drift, overwrite)
+
+  /** The data half of a write: validates `df` against the current
+    * snapshot, writes its files and their stats, and returns what the
+    * commit needs. Nothing is visible until [[Staged.commit]]. */
+  private def stageWrite(df: DataFrame, drift: SchemaDrift, overwrite: Boolean): Staged = {
     val s = snap
     validateWritable(s, overwrite)
     val lowerIn = df.columns.map(_.toLowerCase).toSet
@@ -1583,95 +1599,119 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
           "stats or partition values — refusing to commit the batch")
     }
 
-    // OPTIMISTIC COMMIT with bounded retry (the delta-spark shape): the
-    // data files above are written ONCE; losing the put-if-absent version
-    // claim to a concurrent writer re-resolves the snapshot and re-derives
-    // the commit (schema re-merged — a conflicting writer's new columns
-    // survive; an overwrite's remove set recomputed from the FRESH live
-    // set, i.e. the overwrite serializes AFTER the other commit, which is
-    // exactly what "replace table content" means). Unretriable drift — the
-    // partitioning layout changed under us, or the table became
-    // unwritable — still throws.
-    var cur = s
-    var attempts = 0
-    while (true) {
-      if (attempts > 0) {
-        cur = snap
-        validateWritable(cur, overwrite)
-        if (cur.partitionColumns != partCols)
-          throw new java.util.ConcurrentModificationException(
-            s"partition columns of $path changed concurrently " +
-              s"(${partCols.mkString(",")} -> ${cur.partitionColumns.mkString(",")}) — " +
-              "the written file layout no longer matches")
-        // a mapped table whose schema moved under us may have consumed the
-        // mapping ids this write assigned — never re-commit stale ids
-        if (mapped && cur.schema.json != s.schema.json)
-          throw new java.util.ConcurrentModificationException(
-            s"schema of column-mapped table $path changed concurrently — " +
-              "the assigned column-mapping ids may collide; re-run the write")
-      }
-      val mergedNow0 =
-        if (overwrite || attempts == 0) merged
-        else SchemaEvolution.merge(cur.schema, merged, drift)
-      // the schema this commit's metaData would declare: the mapped path
-      // carries the freshly-id-stamped outSchema; the identity high-water
-      // mark (from the written files' stats) advances its field metadata
-      val mergedNow = {
-        val base = if (mapped) outSchema else mergedNow0
-        (idSpec, newHwm) match {
-          case (Some(is), Some(h)) =>
-            ColumnPolicies.withHighWaterMark(base, is.name, h)
-          case _ => base
+    new Staged(s, w, drift, overwrite, merged, outSchema, configDelta, mapped,
+      idSpec, newHwm, twPreviewOnly)
+  }
+
+  /** Files [[stageWrite]] wrote against snapshot `s`, and the schema,
+    * configuration and identity high-water mark their commit declares. */
+  private final class Staged(
+      val s: DeltaTable.Snapshot, w: Written, drift: SchemaDrift, overwrite: Boolean,
+      merged: StructType, outSchema: StructType, configDelta: Map[String, String],
+      mapped: Boolean, idSpec: Option[ColumnPolicies.Identity], newHwm: Option[Long],
+      twPreviewOnly: Boolean) extends StagedWrite {
+    private val partCols = s.partitionColumns
+    @volatile private var committed = false
+
+    def publish(): Long = commit(snap, txn = None)
+
+    def discard(): Unit =
+      if (!committed) fsu.delete(new HPath(path, w.dirName), recursive = true)
+
+    /** Commits the files as the version after `first`, or after whichever
+      * snapshot a lost race re-resolves. */
+    def commit(first: DeltaTable.Snapshot, txn: Option[(String, Long)]): Long = {
+      // OPTIMISTIC COMMIT with bounded retry (the delta-spark shape): the
+      // data files above are written ONCE; losing the put-if-absent version
+      // claim to a concurrent writer re-resolves the snapshot and re-derives
+      // the commit (schema re-merged — a conflicting writer's new columns
+      // survive; an overwrite's remove set recomputed from the FRESH live
+      // set, i.e. the overwrite serializes AFTER the other commit, which is
+      // exactly what "replace table content" means). Unretriable drift — the
+      // partitioning layout changed under us, or the table became
+      // unwritable — still throws.
+      var cur = first
+      var attempts = 0
+      while (true) {
+        if (attempts > 0) cur = snap
+        if (cur.version != s.version) {
+          validateWritable(cur, overwrite)
+          if (cur.partitionColumns != partCols)
+            throw new java.util.ConcurrentModificationException(
+              s"partition columns of $path changed concurrently " +
+                s"(${partCols.mkString(",")} -> ${cur.partitionColumns.mkString(",")}) — " +
+                "the written file layout no longer matches")
+          // a mapped table whose schema moved under us may have consumed the
+          // mapping ids this write assigned — never re-commit stale ids
+          if (mapped && cur.schema.json != s.schema.json)
+            throw new java.util.ConcurrentModificationException(
+              s"schema of column-mapped table $path changed concurrently — " +
+                "the assigned column-mapping ids may collide; re-run the write")
         }
+        val mergedNow0 =
+          if (overwrite || cur.version == s.version) merged
+          else SchemaEvolution.merge(cur.schema, merged, drift)
+        // the schema this commit's metaData would declare: the mapped path
+        // carries the freshly-id-stamped outSchema; the identity high-water
+        // mark (from the written files' stats) advances its field metadata
+        val mergedNow = {
+          val base = if (mapped) outSchema else mergedNow0
+          (idSpec, newHwm) match {
+            case (Some(is), Some(h)) =>
+              ColumnPolicies.withHighWaterMark(base, is.name, h)
+            case _ => base
+          }
+        }
+        val configNow = cur.configuration ++ configDelta
+        val now = System.currentTimeMillis()
+        val v = cur.version + 1
+        // typeWidening trail: stamp delta.typeChanges on every widened field
+        // against the FRESH snapshot's schema (a retry re-diffs — a
+        // concurrent writer may already have applied the same widen)
+        val (mergedFinal, twChangesNow) =
+          if (overwrite) (mergedNow, Nil)
+          else TypeWidening.stamp(cur.schema, mergedNow,
+            if (twPreviewOnly) Some(v) else None)
+        // a concurrent retry of the SAME idempotent batch may have won the
+        // race while we were losing it — re-check the watermark against the
+        // re-resolved snapshot and bail as a no-op (staged files become
+        // vacuum-reclaimable orphans, never duplicate rows)
+        txn.foreach { case (appId, tv) =>
+          if (cur.txns.get(appId).exists(_ >= tv)) return cur.version
+        }
+        // a widening commit on a table without the feature lists it first:
+        // the owner's delta.enableTypeWidening=true (vetted above) IS the
+        // opt-in delta-spark would have stamped the protocol with
+        val curHasTw = cur.writerFeatures.contains(TypeWidening.Feature) ||
+          cur.writerFeatures.contains(TypeWidening.PreviewFeature)
+        val lines =
+          Seq(commitInfoLine(cur, now, "WRITE",
+            Seq("mode" -> (if (overwrite) "Overwrite" else "Append")))) ++
+          // SetTransaction rides the same commit as its data (commitInfo stays
+          // the FIRST line — the ICT fast-path reads only that far)
+          txn.map { case (appId, tv) => DeltaActions.txn(appId, tv, now) } ++
+          (if (twChangesNow.nonEmpty && !curHasTw)
+            Seq(protocolUpgradeLine(cur, TypeWidening.Feature)) else Nil) ++
+          (if (mergedFinal.json == cur.schema.json && configNow == cur.configuration) Nil
+          else Seq(metaDataLine(cur, mergedFinal.json, partCols, configNow, now))) ++
+          // Add.rawPath (and its deletion vector) is exactly what the foreign
+          // log recorded — emitting the identical add key guarantees the
+          // remove cancels its add for every reader, percent-encoding included
+          (if (overwrite) cur.adds.map(DeltaActions.remove(_, now, dataChange = true))
+          else Nil) ++
+          freshAddLines(cur, v, w, dataChange = true)
+        if (tryClaim(v, lines)) {
+          committed = true
+          postCommit(v)
+          return v
+        }
+        attempts += 1
+        if (attempts >= MaxCommitAttempts)
+          throw new java.util.ConcurrentModificationException(
+            s"lost the commit race on Delta table $path $attempts times — giving up")
       }
-      val configNow = cur.configuration ++ configDelta
-      val now = System.currentTimeMillis()
-      val v = cur.version + 1
-      // typeWidening trail: stamp delta.typeChanges on every widened field
-      // against the FRESH snapshot's schema (a retry re-diffs — a
-      // concurrent writer may already have applied the same widen)
-      val (mergedFinal, twChangesNow) =
-        if (overwrite) (mergedNow, Nil)
-        else TypeWidening.stamp(cur.schema, mergedNow,
-          if (twPreviewOnly) Some(v) else None)
-      // a concurrent retry of the SAME idempotent batch may have won the
-      // race while we were losing it — re-check the watermark against the
-      // re-resolved snapshot and bail as a no-op (staged files become
-      // vacuum-reclaimable orphans, never duplicate rows)
-      txn.foreach { case (appId, tv) =>
-        if (cur.txns.get(appId).exists(_ >= tv)) return cur.version
-      }
-      // a widening commit on a table without the feature lists it first:
-      // the owner's delta.enableTypeWidening=true (vetted above) IS the
-      // opt-in delta-spark would have stamped the protocol with
-      val curHasTw = cur.writerFeatures.contains(TypeWidening.Feature) ||
-        cur.writerFeatures.contains(TypeWidening.PreviewFeature)
-      val lines =
-        Seq(commitInfoLine(cur, now, "WRITE",
-          Seq("mode" -> (if (overwrite) "Overwrite" else "Append")))) ++
-        // SetTransaction rides the same commit as its data (commitInfo stays
-        // the FIRST line — the ICT fast-path reads only that far)
-        txn.map { case (appId, tv) => DeltaActions.txn(appId, tv, now) } ++
-        (if (twChangesNow.nonEmpty && !curHasTw)
-          Seq(protocolUpgradeLine(cur, TypeWidening.Feature)) else Nil) ++
-        (if (mergedFinal.json == cur.schema.json && configNow == cur.configuration) Nil
-        else Seq(metaDataLine(cur, mergedFinal.json, partCols, configNow, now))) ++
-        // Add.rawPath (and its deletion vector) is exactly what the foreign
-        // log recorded — emitting the identical add key guarantees the
-        // remove cancels its add for every reader, percent-encoding included
-        (if (overwrite) cur.adds.map(DeltaActions.remove(_, now, dataChange = true))
-        else Nil) ++
-        freshAddLines(cur, v, w, dataChange = true)
-      if (tryClaim(v, lines)) {
-        postCommit(v)
-        return v
-      }
-      attempts += 1
-      if (attempts >= MaxCommitAttempts)
-        throw new java.util.ConcurrentModificationException(
-          s"lost the commit race on Delta table $path $attempts times — giving up")
+      -1L // unreachable
     }
-    -1L // unreachable
   }
 
   private val MaxCommitAttempts = 20

@@ -27,4 +27,20 @@ trait HistoryTable {
   /** Returns the committed version. */
   def append(df: DataFrame, drift: SchemaDrift = SchemaDrift.NewOnly): Long
   def overwrite(df: DataFrame, drift: SchemaDrift = SchemaDrift.Full): Long
+  /** Writes `df`'s files as an append (or, with `overwrite`, a
+    * replacement) WITHOUT committing them: no reader sees them until
+    * [[StagedWrite.publish]] makes them the table's next version — the
+    * commit `append`/`overwrite` would have made, resolved against the
+    * table as it is at publish time. [[StagedWrite.discard]] deletes
+    * them instead. */
+  private[graft] def stage(df: DataFrame, drift: SchemaDrift, overwrite: Boolean): StagedWrite
+}
+
+/** Files written by [[HistoryTable.stage]], not yet part of any version. */
+private[graft] trait StagedWrite {
+  /** Commits the staged files as the table's next version; returns it. */
+  def publish(): Long
+  /** Deletes the staged files. A no-op once [[publish]] has committed
+    * them, so a caller may discard unconditionally on its way out. */
+  def discard(): Unit
 }

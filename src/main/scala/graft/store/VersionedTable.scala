@@ -470,22 +470,65 @@ final class VersionedTable(spark: SparkSession, val path: String)
       extraProps: Map[String, String] = Map.empty): Long = {
     val prev = latestVersion.map(readManifest)
     val nextV = prev.map(_.version + 1).getOrElse(0L)
-    val merged = prev match {
-      case Some(m) if !overwrite =>
-        SchemaEvolution.merge(
-          DataType.fromJson(m.schemaJson).asInstanceOf[StructType],
-          SchemaEvolution.relaxNullable(df.schema), drift)
-      case _ => SchemaEvolution.relaxNullable(df.schema)
-    }
-    val aligned = align(df, merged)
-    val dirName = f"v$nextV%010d-${UUID.randomUUID().toString.take(8)}"
-    val newDir = writeDataDir(aligned, merged, dirName)
+    val merged = mergedSchema(prev, df.schema, overwrite, drift)
+    val newDir = writeDataDir(align(df, merged), merged,
+      f"v$nextV%010d-${UUID.randomUUID().toString.take(8)}")
+    commitDir(prev, newDir, merged, overwrite, extraProps)
+  }
+
+  /** The logical schema a write of `incoming` commits over `prev`. */
+  private def mergedSchema(prev: Option[Manifest], incoming: StructType,
+      overwrite: Boolean, drift: SchemaDrift): StructType = prev match {
+    case Some(m) if !overwrite =>
+      SchemaEvolution.merge(
+        DataType.fromJson(m.schemaJson).asInstanceOf[StructType],
+        SchemaEvolution.relaxNullable(incoming), drift)
+    case _ => SchemaEvolution.relaxNullable(incoming)
+  }
+
+  /** Publishes `newDir` as the version after `prev`, beside or instead of
+    * its live dirs. */
+  private def commitDir(prev: Option[Manifest], newDir: DataDir, schema: StructType,
+      overwrite: Boolean, extraProps: Map[String, String]): Long = {
+    val nextV = prev.map(_.version + 1).getOrElse(0L)
     val dirs = if (overwrite) Seq(newDir)
       else prev.map(_.dirs).getOrElse(Nil) :+ newDir
-    writeManifest(Manifest(nextV, dirs, merged.json,
+    writeManifest(Manifest(nextV, dirs, schema.json,
       prev.map(_.properties).getOrElse(Map.empty) ++ extraProps,
       op = if (overwrite) "overwrite" else "append"))
     nextV
+  }
+
+  /** The data dir is written under `data/.stage-<id>`, a name no manifest
+    * lists; publishing renames it to `v<next>-<id>` — a data dir's name
+    * carries its committing version, which [[readCommit]] and the change
+    * feeds read — and commits it like [[append]] / [[overwrite]] against
+    * the manifest current at publish time. */
+  private[graft] def stage(df: DataFrame, drift: SchemaDrift, overwrite: Boolean): StagedWrite = {
+    val merged = mergedSchema(latestVersion.map(readManifest), df.schema, overwrite, drift)
+    val id = UUID.randomUUID().toString.take(8)
+    val staged = writeDataDir(align(df, merged), merged, s"$StagePrefix$id")
+    new StagedWrite {
+      /** Where the uncommitted files are; None once committed or deleted. */
+      private var at: Option[HPath] = Some(new HPath(dataDir, staged.dir))
+      def publish(): Long = synchronized {
+        val from = at.getOrElse(throw new IllegalStateException(
+          s"staged write ${staged.dir} of $path was already published or discarded"))
+        val prev = latestVersion.map(readManifest)
+        val dir = f"v${prev.map(_.version + 1).getOrElse(0L)}%010d-$id"
+        val to = new HPath(dataDir, dir)
+        if (!fsu.fs.rename(from, to)) throw new java.io.IOException(s"rename $from -> $to failed")
+        at = Some(to)
+        val v = commitDir(prev, staged.copy(dir = dir),
+          mergedSchema(prev, merged, overwrite, drift), overwrite, Map.empty)
+        at = None
+        v
+      }
+      def discard(): Unit = synchronized {
+        at.foreach(fsu.delete(_, recursive = true))
+        at = None
+      }
+    }
   }
 
   /** Exactly-once append for at-least-once callers (foreachBatch retries,
@@ -955,6 +998,9 @@ final class VersionedTable(spark: SparkSession, val path: String)
 object VersionedTable {
   private val log = org.slf4j.LoggerFactory.getLogger(classOf[VersionedTable])
   private val ManifestName = """v(\d{10})\.json""".r
+  /** Name prefix of a data dir written by [[VersionedTable.stage]] and not
+    * yet published. */
+  private val StagePrefix = ".stage-"
   /** Internal column carrying a row's originating data dir in pruning scans. */
   private val DirCol = "__graft_dir"
   /** Internal columns carrying row provenance for deletion-vector writes. */

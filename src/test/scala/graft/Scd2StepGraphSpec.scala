@@ -84,7 +84,7 @@ class Scd2StepGraphSpec extends SparkSuite {
     var result: LoadResult = null
     val jobs = jobsOf { result = s.execute() }
     assert(result == LoadResult.DeltaLoad(2, 1, 1, dirty = false))
-    assert(jobs.size == 21, s"sync job count; labels: ${jobs.map(_.desc)}")
+    assert(jobs.size == 18, s"sync job count; labels: ${jobs.map(_.desc)}")
 
     assert(overlaps(span(jobs, "step2: history append"), span(jobs, "step3: strange-pk probe")),
       "step-2 history append and strange probe ran one after the other")
