@@ -95,6 +95,17 @@ private[graft] object Caching {
     p
   }
 
+  /** Eager lineage-truncating checkpoint, the one way graft cuts a plan
+    * (an iterative loop's round references the previous round's plan
+    * twice, so without it the plan doubles per round — exponential
+    * analyzer cost long before data size matters). Reliable (written under
+    * the session's checkpoint dir, so a lost executor leaves data to
+    * recompute from) when the caller configured one, executor-local
+    * otherwise. */
+  def truncate(df: DataFrame): DataFrame =
+    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+    else df.localCheckpoint(true)
+
   /** Unpersist every tracked intermediate registered since the last call.
     * PROCESS-WIDE: call between batches, not while another pipeline's
     * returned DataFrame is still un-consumed on a different thread — its

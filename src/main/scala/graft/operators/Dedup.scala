@@ -30,7 +30,7 @@ import graft.functions.TextFunctions._
   * entries otherwise accumulate local disk for the session's lifetime.
   */
 object Dedup {
-  import Caching.{spillPersist, spillPersistEager, spread}
+  import Caching.{spillPersist, spillPersistEager, spread, truncate}
 
   /** Unpersist every intermediate the pipeline operators persisted since
     * the last call (shared registry — see [[Caching.release]]). Call AFTER
@@ -1339,16 +1339,6 @@ object Dedup {
     cc.unionByName(singletons)
   }
 
-  /** Eager lineage-truncating checkpoint for the iterative loops: each
-    * round's plan references the previous round's TWICE, so without
-    * truncation the logical plan doubles per round — exponential analyzer
-    * cost that aborts long-diameter runs (40 rounds = 2^40 plan nodes)
-    * long before data size matters. Reliable (checkpoint-dir) when the
-    * caller configured one, local otherwise — see [[duplicateClusters]]. */
-  private def roundCheckpoint(df: DataFrame): DataFrame =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
-    else df.localCheckpoint(true)
-
   /** The observed metrics row of a just-checkpointed round relation, with
     * a BOUNDED wait (r16 ADVICE): the loop fusions rely on observations
     * firing on the eager (local)checkpoint action — probed empirically on
@@ -1382,7 +1372,7 @@ object Dedup {
     // initial labels, a node's closed-neighborhood minimum IS
     // least(id, min(neighbor ids)) — one colocated agg over the edge list
     // seeds the loop a full round ahead
-    var labels = roundCheckpoint(
+    var labels = truncate(
       edges.groupBy("dst").agg(min("src").as("mn"))
         .select(col("dst").as("id"), least(col("dst"), col("mn")).as("cluster_id")))
     var iters = 1
@@ -1404,7 +1394,7 @@ object Dedup {
       // checkpoint job plus a count job, and at scale one fewer full pass
       // over the labels per round (guide §1.2/§2.4: remove passes first)
       val chgObs = org.apache.spark.sql.Observation()
-      val next = roundCheckpoint(
+      val next = truncate(
         self.unionByName(upd)
           .groupBy("id").agg(min("nl").as("cluster_id"), max("own").as("old"))
           .select(col("id"), col("cluster_id"),
@@ -1475,7 +1465,7 @@ object Dedup {
         .filter(col("su") =!= col("sv"))
         .unionByName(minU.select(col("u").as("su"), col("m").as("sv")))
         .distinct()
-      // eager checkpoint truncates lineage (see roundCheckpoint: per-round
+      // eager checkpoint truncates lineage (see Caching.truncate: per-round
       // plan doubling is exponential without it); the round's edge count
       // AND its fixpoint evidence both ride it as ONE Observation: a left
       // join against the previous (persisted) edge set marks edges not
@@ -1488,7 +1478,7 @@ object Dedup {
       val cntObs = org.apache.spark.sql.Observation()
       val prev = edges.select(col("u").as("pu"), col("v").as("pv"),
         lit(true).as("__old"))
-      val next = roundCheckpoint(small.select(col("su").as("u"), col("sv").as("v"))
+      val next = truncate(small.select(col("su").as("u"), col("sv").as("v"))
         .join(prev, col("u") === col("pu") && col("v") === col("pv"), "left")
         .select(col("u"), col("v"), col("__old").isNull.as("__fresh"))
         .observe(cntObs, count(lit(1)).as("n"),

@@ -116,7 +116,7 @@ object Graph {
             (base + coalesce(col("mass"), lit(0L))).as("pr_x1e9")))
       liveRounds ::= scores
       if (i % flushRounds == 0 && i < iters) {
-        scores = scores.localCheckpoint(true) // eager; truncates lineage
+        scores = Caching.truncate(scores)
         liveRounds.foreach(_.unpersist(blocking = false)) // newest first
         liveRounds = Nil
       }

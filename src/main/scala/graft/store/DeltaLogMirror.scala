@@ -25,11 +25,15 @@ import graft.store.VersionedTable.Manifest
   * on THIS side because emission is plain JSON over the already-written
   * parquet files.
   *
-  * Emission is a pure function of the manifest chain: the mirror replays
-  * its own log to the live file set, lists ONLY data dirs it has not seen
-  * before (data dirs are immutable once committed — each is written
-  * exactly once by its commit), diffs against the manifest's dir list,
-  * and emits the add/remove delta. One shape covers every operation:
+  * Emission is a pure function of the manifest chain. The mirror's state
+  * is the [[DeltaTable.Snapshot]] of its own log, built by the shared
+  * replay ([[DeltaTable.Replay]] over [[DeltaActions.decode]]): a cold
+  * handle replays the JSON commits once, and every commit then advances
+  * the state by replaying exactly the lines it just published, so a warm
+  * and a cold handle cannot disagree. Per commit it lists ONLY data dirs it
+  * has not seen before (data dirs are immutable once committed — each is
+  * written exactly once by its commit), diffs against the manifest's dir
+  * list, and emits the add/remove delta. One shape covers every operation:
   * append (adds only), overwrite (remove-all + adds), merge (removes of
   * rewritten dirs + adds), restore (diff back to the old file set),
   * empty-overwrite (removes only), setProperties (metaData-only commit).
@@ -48,93 +52,43 @@ final class DeltaLogMirror(
     spark: SparkSession, tablePath: String,
     lookupManifest: Long => Option[Manifest]) {
   import DeltaLogMirror._
-  import VersionedTable.mapper
 
   private val fsu = new Fs(spark, tablePath)
   private val logDir = new HPath(tablePath, "_delta_log")
   private def logPath(v: Long) = new HPath(logDir, f"$v%020d.json")
 
-  /** Live mirror state after version `version`: table id + last-emitted
-    * schema/config + live (relative path → add, DV included) file set +
-    * which protocol upgrades have been emitted. */
-  // (case class nested in a final class: the unchecked-outer warning is moot,
-  // State never crosses instances)
-  private case class State(
-      version: Long, tableId: String, schemaJson: String,
-      config: Map[String, String], files: Map[String, DeltaTable.Add],
-      dvProtocol: Boolean = false, cdfProtocol: Boolean = false,
-      twProtocol: Boolean = false) {
-    def protocol: Protocol = protocolOf(dvProtocol, cdfProtocol, twProtocol)
-  }
-
   // one cold replay per instance, then incremental
-  private var cached: Option[State] = None
+  private var cached: Option[DeltaTable.Snapshot] = None
 
   private def lastVersion: Option[Long] = {
     val vs = fsu.list(logDir).map(_.getName).collect { case LogName(v) => v.toLong }
     if (vs.isEmpty) None else Some(vs.max)
   }
 
-  private def freshState: State =
-    State(-1L, java.util.UUID.randomUUID().toString, "", Map.empty, Map.empty)
+  private def freshState: DeltaTable.Snapshot =
+    DeltaTable.Snapshot(-1L, new StructType(), Nil, Map.empty, Nil,
+      UUID.randomUUID().toString)
 
   /** Replay own emitted actions — driver-side, tiny JSON files. */
-  private def replay(upTo: Long): State = {
-    var s = freshState
-    var dvProto = false
-    var cdfProto = false
-    var twProto = false
-    val files = scala.collection.mutable.LinkedHashMap[String, DeltaTable.Add]()
+  private def replay(upTo: Long): DeltaTable.Snapshot = {
+    val r = new DeltaTable.Replay(Some(freshState))
     (0L to upTo).foreach { v =>
       val p = logPath(v)
-      if (fsu.exists(p)) fsu.readString(p).split('\n').filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("metaData")) {
-          val md = node.get("metaData")
-          s = s.copy(tableId = md.get("id").asText(),
-            schemaJson = md.get("schemaString").asText(),
-            config = Option(md.get("configuration")).map(_.fields().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap).getOrElse(Map.empty))
-        }
-        if (node.has("protocol")) {
-          val pn = node.get("protocol")
-          val rf = Option(pn.get("readerFeatures"))
-          if (rf.exists(_.elements().asScala.exists(_.asText() == "deletionVectors")))
-            dvProto = true
-          if (rf.exists(_.elements().asScala.exists(_.asText() == TypeWidening.Feature)))
-            twProto = true
-          val wf = Option(pn.get("writerFeatures"))
-          if (Option(pn.get("minWriterVersion")).exists(w => w.asInt() >= 4 && w.asInt() < 7) ||
-              wf.exists(_.elements().asScala.exists(_.asText() == "changeDataFeed")))
-            cdfProto = true
-        }
-        if (node.has("add")) {
-          val a = node.get("add")
-          val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
-            DeletionVectors.Descriptor(d.get("storageType").asText(),
-              d.get("pathOrInlineDv").asText(), Option(d.get("offset")).map(_.asInt()),
-              d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
-          }
-          val p = a.get("path").asText()
-          files(p) = DeltaTable.Add(p, a.get("size").asLong(),
-            a.get("modificationTime").asLong(), Map.empty, None, dv)
-        }
-        if (node.has("remove")) files.remove(node.get("remove").get("path").asText())
-      }
+      if (fsu.exists(p)) DeltaActions.read(fsu, p).foreach(r(_))
     }
-    s.copy(version = upTo, files = files.toMap,
-      dvProtocol = dvProto, cdfProtocol = cdfProto, twProtocol = twProto)
+    r.snapshot(upTo)
   }
 
   /** Mirror everything up to (and including) manifest `m`. Called after
-    * each manifest publish; normally emits exactly one version. Every
-    * [[DeltaLogMirror.CheckpointInterval]] versions the full state is also
-    * written as a protocol parquet checkpoint + `_last_checkpoint`
-    * pointer, so a Delta client opens the table from the checkpoint plus
-    * the JSON tail instead of replaying every commit since version 0 —
-    * the log-scaling requirement for long-lived tables (a year of hourly
-    * syncs is ~9k commits; linear JSON replay per read is the first thing
-    * a real deployment hits). */
+    * each manifest publish; normally emits exactly one version, plus its
+    * version-checksum sidecar ([[VersionChecksum]]) written from the state
+    * the mirror holds. Every [[DeltaLogMirror.CheckpointInterval]]
+    * versions the full state is also written as a protocol parquet
+    * checkpoint + `_last_checkpoint` pointer, so a Delta client opens the
+    * table from the checkpoint plus the JSON tail instead of replaying
+    * every commit since version 0 — the log-scaling requirement for
+    * long-lived tables (a year of hourly syncs is ~9k commits; linear JSON
+    * replay per read is the first thing a real deployment hits). */
   def sync(m: Manifest): Unit = {
     val last = lastVersion
     if (last.exists(_ >= m.version)) return // already mirrored
@@ -154,82 +108,27 @@ final class DeltaLogMirror(
       // cadence: the table's delta.checkpointInterval property when set
       // (rides graft table properties into the mirrored configuration,
       // same key delta-spark reads), else the protocol default 10
-      if (v > 0 && v % checkpointEvery(state.config) == 0) writeCheckpoint(v, state)
-      writeCrc(v, state)
+      if (v > 0 && v % checkpointEvery(state.configuration) == 0)
+        writeCheckpoint(spark, fsu, logDir, v, state)
+      VersionChecksum.write(fsu, logDir, state, None)
     }
     cached = Some(state)
   }
 
-  /** Version-checksum sidecar ([[VersionChecksum]]) for a mirrored commit —
-    * counts come from the INCREMENTAL state (no log replay on the hot
-    * graft write path), and the embedded protocol/metadata are derived by
-    * the same rules [[emit]] uses (cumulative feature booleans →
-    * featureLists; graft CdfProp → delta.enableChangeDataFeed), so the crc
-    * agrees with the emitted actions. Skipped only while no metaData has
-    * ever been emitted (cannot happen past v0 — emit heals v0 with a
-    * fallback metaData). */
-  private def writeCrc(v: Long, st: State): Unit = {
-    if (st.schemaJson.isEmpty) return
-    val p = st.protocol
-    val snap = DeltaTable.Snapshot(v,
-      DataType.fromJson(st.schemaJson).asInstanceOf[StructType],
-      Nil, deltaConfig(st.config), st.files.values.toSeq, st.tableId,
-      p.minWriter, p.writerFeatures, p.minReader, p.readerFeatures)
-    VersionChecksum.write(fsu, logDir, snap, None)
-  }
-
-  /** Protocol parquet checkpoint of the full state at version `v`: one row
-    * per action (protocol, metaData, one add per live file — dataChange
-    * false per the checkpoint spec), published as
-    * `_delta_log/%020d.checkpoint.parquet` + the `_last_checkpoint`
-    * pointer. The per-commit JSON files stay — internal replay and older
-    * readers keep working; checkpoints are purely additive. */
-  private def writeCheckpoint(v: Long, state: State): Unit = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.spark.sql.Row
-    val now = System.currentTimeMillis()
-    val p = state.protocol
-    val protoRow = Row(Row(p.minReader, p.minWriter,
-      if (p.minReader >= 3) p.readerFeatures else null,
-      if (p.minWriter >= 7) p.writerFeatures else null), null, null, null)
-    // same config translation the JSON commits' metaData carries: external
-    // CDF readers resolve configuration from the checkpoint once no later
-    // metaData action is in the tail, so the delta key must be present
-    // here too or table_changes dies every CheckpointInterval
-    val metaRow = Row(null,
-      Row(state.tableId, null, null, Row("parquet", Map.empty[String, String]),
-        state.schemaJson, Seq.empty[String], deltaConfig(state.config), now),
-      null, null)
-    val addRows = state.files.toSeq.sortBy(_._1).map { case (path, a) =>
-      Row(null, null, Row(path, Map.empty[String, String], a.size, now, false,
-        a.dv.map(d => Row(d.storageType, d.pathOrInlineDv,
-          d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull),
-        null)
-    }
-    // graft.txn.* idempotency watermarks as protocol SetTransaction rows:
-    // an external delta-spark txnVersion(appId) keeps working from the
-    // checkpoint alone (same retention rule as the JSON translation)
-    val txnRows = state.config.toSeq
-      .collect { case (k, value) if k.startsWith("graft.txn.") =>
-        Row(null, null, null, Row(k.stripPrefix("graft.txn."), value.toLong, null))
-      }.sortBy(_.getStruct(3).getString(0))
-    val rows: Seq[Row] = Seq(protoRow, metaRow) ++ addRows ++ txnRows
-    DeltaLogMirror.publishCheckpoint(spark, fsu, logDir, v, rows,
-      DeltaLogMirror.checkpointSchema,
-      partSize = positiveLongProp(state.config, "delta.checkpoint.partSize"))
-  }
+  /** The parquet data files directly under `rel` (table-relative). */
+  private def parquetFiles(rel: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    fsu.fs.listStatus(new HPath(tablePath, rel)).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
+        !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
 
   /** The parquet files of one data dir as (DV-less) adds, listed from disk. */
   private def listDir(dir: String): Seq[DeltaTable.Add] =
-    fsu.fs.listStatus(new HPath(tablePath, s"data/$dir")).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-        !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-      .map(st => DeltaTable.Add(s"data/$dir/${st.getPath.getName}", st.getLen,
-        st.getModificationTime, Map.empty, None))
+    parquetFiles(s"data/$dir").map(st => DeltaTable.Add(
+      s"data/$dir/${st.getPath.getName}", st.getLen, st.getModificationTime, Map.empty, None))
 
   private def emit(
-      v: Long, state: State, target: Option[Manifest],
-      metaFallback: => Manifest): State = {
+      v: Long, state: DeltaTable.Snapshot, target: Option[Manifest],
+      metaFallback: => Manifest): DeltaTable.Snapshot = {
     val now = System.currentTimeMillis()
     val lines = scala.collection.mutable.ArrayBuffer[String]()
     def emitMetaData(schemaJson: String, props: Map[String, String]): Unit =
@@ -256,40 +155,34 @@ final class DeltaLogMirror(
     // typeWidening feature — or external engines refuse/misread the old
     // files. Changes OUTSIDE the Delta lattice (date→timestamp is
     // graft-legal) emit unstamped: not representable, best-effort.
-    // The stamped schema is what `state.schemaJson` stores, so trails
+    // The stamped schema is what the state's schema holds, so trails
     // accumulate across commits and survive replay.
     val (mirSchemaJson, targetTw) = target match {
-      case Some(man) if state.schemaJson.nonEmpty =>
-        val prev = DataType.fromJson(state.schemaJson).asInstanceOf[StructType]
+      case Some(man) if state.version >= 0 =>
         val nw = DataType.fromJson(man.schemaJson).asInstanceOf[StructType]
-        val (stamped, ch) = TypeWidening.stamp(prev, nw)
+        val (stamped, ch) = TypeWidening.stamp(state.schema, nw)
         (stamped.json, ch.exists(_.legalForDelta))
       case Some(man) => (man.schemaJson, false)
-      case None => (state.schemaJson, false)
+      case None => ("", false)
     }
-    val upgradeDv = targetHasDv && !state.dvProtocol
-    val upgradeCdf = targetCdf && !state.cdfProtocol
-    val upgradeTw = targetTw && !state.twProtocol
-    if (v == 0L || upgradeDv || upgradeCdf || upgradeTw) {
-      val p = protocolOf(targetHasDv || state.dvProtocol,
-        targetCdf || state.cdfProtocol, targetTw || state.twProtocol)
+    val (dv, cdf, tw) = mirroredFeatures(state)
+    val p = protocolOf(targetHasDv || dv, targetCdf || cdf, targetTw || tw)
+    if (v == 0L || p != protocolOf(dv, cdf, tw))
       lines += DeltaActions.protocol(p.minReader, p.minWriter, p.readerFeatures, p.writerFeatures)
-    }
 
-    val next = target match {
+    target match {
       case None if v == 0L =>
         // heal a vacuumed v0: still a no-op for files, but emit metaData
         // from the earliest surviving manifest so EVERY snapshot in the
         // log satisfies the protocol's metaData requirement
         val fb = metaFallback
         emitMetaData(fb.schemaJson, fb.properties)
-        state.copy(version = v, schemaJson = fb.schemaJson, config = fb.properties)
-      case None => state.copy(version = v) // heal gap: no-op commit
+      case None => () // heal gap: no-op commit
       case Some(man) =>
-        // compared as mirrored: a cold replay's config already carries the
-        // translated CDF key the raw manifest properties lack
-        if (v == 0L || mirSchemaJson != state.schemaJson ||
-            deltaConfig(man.properties) != deltaConfig(state.config))
+        // compared as mirrored: the state's config is the emitted one,
+        // carrying the translated CDF key the raw manifest properties lack
+        if (v == 0L || mirSchemaJson != state.schema.json ||
+            deltaConfig(man.properties) != state.configuration)
           emitMetaData(mirSchemaJson, man.properties)
         // manifest DV entries → Delta descriptors ("p" storage: graft DV
         // container files use the protocol's exact on-disk block layout, so
@@ -304,30 +197,30 @@ final class DeltaLogMirror(
         }.toMap
         // target live set: reuse replayed entries for dirs already live
         // (immutable), list only unseen dirs from disk
+        val live = state.adds.groupBy(a => a.rawPath.substring(0, a.rawPath.lastIndexOf('/') + 1))
         val targetFiles = scala.collection.mutable.LinkedHashMap[String, DeltaTable.Add]()
         man.dirs.foreach { d =>
-          val prefix = s"data/${d.dir}/"
-          val known = state.files.values.filter(_.rawPath.startsWith(prefix))
-          (if (known.nonEmpty) known.toSeq else listDir(d.dir)).foreach { a =>
+          live.getOrElse(s"data/${d.dir}/", listDir(d.dir)).foreach { a =>
             targetFiles(a.rawPath) = a.copy(dv = dvByPath.get(a.rawPath))
           }
         }
         // a file whose DV changed is logically replaced: remove (with the
         // old descriptor) + re-add with the new one (the Delta DV-commit
         // shape)
-        state.files.values.foreach { a =>
+        val liveByPath = state.adds.iterator.map(a => a.rawPath -> a).toMap
+        state.adds.foreach { a =>
           if (targetFiles.get(a.rawPath).forall(_.dv != a.dv))
             lines += DeltaActions.remove(a, now, dataChange = true)
         }
         targetFiles.values.foreach { a =>
-          if (state.files.get(a.rawPath).forall(_.dv != a.dv))
+          if (liveByPath.get(a.rawPath).forall(_.dv != a.dv))
             lines += DeltaActions.add(a, dataChange = true)
         }
         // graft.txn.* watermarks that moved in THIS commit become protocol
         // SetTransaction actions — an external engine's txnVersion(appId)
         // sees graft's exactly-once state natively
         man.properties.foreach { case (k, value) =>
-          if (k.startsWith("graft.txn.") && !state.config.get(k).contains(value))
+          if (k.startsWith("graft.txn.") && !state.configuration.get(k).contains(value))
             lines += DeltaActions.txn(k.stripPrefix("graft.txn."), value.toLong, now)
         }
         // real Delta cdc actions over the graft-materialized change files:
@@ -335,21 +228,13 @@ final class DeltaLogMirror(
         // at its exact row-level changes (commits carrying cdc actions are
         // read from those ALONE; others derive from dataChange add/remove)
         if (targetCdf) man.changeDir.foreach { cd =>
-          val cdDir = new HPath(tablePath, s"_change_data/$cd")
-          if (fsu.isDir(cdDir)) fsu.fs.listStatus(cdDir).toSeq
-            .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet") &&
-              !st.getPath.getName.startsWith(".") && !st.getPath.getName.startsWith("_"))
-            .foreach { st =>
+          if (fsu.isDir(new HPath(tablePath, s"_change_data/$cd")))
+            parquetFiles(s"_change_data/$cd").foreach { st =>
               lines += DeltaActions.cdc(new java.net.URI(null, null,
                 s"_change_data/$cd/${st.getPath.getName}", null).toASCIIString,
                 Nil, st.getLen)
             }
         }
-        state.copy(version = v, schemaJson = mirSchemaJson,
-          config = man.properties, files = targetFiles.toMap,
-          dvProtocol = state.dvProtocol || upgradeDv,
-          cdfProtocol = state.cdfProtocol || upgradeCdf,
-          twProtocol = state.twProtocol || upgradeTw)
     }
     fsu.mkdirs(logDir)
     // put-if-absent: a published Delta commit JSON is immutable — a
@@ -366,7 +251,9 @@ final class DeltaLogMirror(
           s"mirror commit ${logPath(v)} already exists with DIFFERENT " +
             "content — refusing to replace a published Delta commit", e)
     }
-    next
+    val next = new DeltaTable.Replay(Some(state))
+    lines.foreach(l => DeltaActions.decode(l).foreach(next(_)))
+    next.snapshot(v)
   }
 }
 
@@ -376,26 +263,31 @@ object DeltaLogMirror {
   /** Delta's default checkpoint cadence. */
   val CheckpointInterval = 10L
 
-  private final case class Protocol(
-      minReader: Int, minWriter: Int,
-      readerFeatures: Seq[String], writerFeatures: Seq[String])
-
   /** The mirror's protocol for its cumulative feature set — one derivation
     * so the JSON commits, the crc and the checkpoint rows agree: (1,2)
     * plain, (1,4) the legacy CDF writer, and the table-features form (3,7)
     * once deletion vectors or type widening are in play, with the legacy
     * writer features listed so the set stays complete after upgrades. */
-  private def protocolOf(dv: Boolean, cdf: Boolean, tw: Boolean): Protocol =
+  private def protocolOf(dv: Boolean, cdf: Boolean, tw: Boolean): DeltaActions.Protocol =
     if (dv || tw)
-      Protocol(3, 7,
+      DeltaActions.Protocol(3, 7,
         (if (dv) Seq("deletionVectors") else Nil) ++
           (if (tw) Seq(TypeWidening.Feature) else Nil),
         Seq("appendOnly", "invariants") ++
           (if (dv) Seq("deletionVectors") else Nil) ++
           (if (cdf) Seq("changeDataFeed") else Nil) ++
           (if (tw) Seq(TypeWidening.Feature) else Nil))
-    else if (cdf) Protocol(1, 4, Nil, Nil)
-    else Protocol(1, 2, Nil, Nil)
+    else if (cdf) DeltaActions.Protocol(1, 4, Nil, Nil)
+    else DeltaActions.Protocol(1, 2, Nil, Nil)
+
+  /** The (deletion vectors, CDF, type widening) booleans a mirrored state's
+    * protocol carries: DVs and widening as reader features, CDF as the
+    * legacy (1,4) writer or a listed writer feature. */
+  private def mirroredFeatures(s: DeltaTable.Snapshot): (Boolean, Boolean, Boolean) = (
+    s.readerFeatures.contains("deletionVectors"),
+    (s.minWriterVersion >= 4 && s.minWriterVersion < 7) ||
+      s.writerFeatures.contains("changeDataFeed"),
+    s.readerFeatures.contains(TypeWidening.Feature))
 
   /** Mirrored table configuration: the graft properties plus
     * `delta.enableChangeDataFeed` under graft's CDF property — Delta
@@ -456,14 +348,12 @@ object DeltaLogMirror {
     * total). At 100 TB a legacy-protocol table (no v2Checkpoint feature
     * available) can hold millions of add actions; partSize bounds each
     * checkpoint file so no single write or read materializes the whole
-    * state in one task. Shared by the graft-manifest mirror and the
-    * foreign-Delta writer. */
-  private[store] def publishCheckpoint(
+    * state in one task. */
+  private def publishCheckpoint(
       spark: SparkSession, fsu: Fs, logDir: HPath, v: Long,
-      rows: Seq[org.apache.spark.sql.Row], schema: StructType,
-      partSize: Option[Long] = None): Unit = {
+      rows: Seq[org.apache.spark.sql.Row], partSize: Option[Long]): Unit = {
     def writeOne(slice: Seq[org.apache.spark.sql.Row], destName: String): Unit =
-      writeParquetFile(spark, fsu, logDir, slice, schema, new HPath(logDir, destName))
+      writeParquetFile(spark, fsu, logDir, slice, checkpointSchema, new HPath(logDir, destName))
     val nParts = partSize.filter(ps => ps > 0 && rows.size > ps)
       .map(ps => math.ceil(rows.size.toDouble / ps).toInt)
     nParts match {
@@ -486,17 +376,16 @@ object DeltaLogMirror {
     * required `checkpointMetadata` row and the `sidecar` pointer. At scale
     * this is the point of the v2 layout: the (large) file listing is
     * referenced, not rewritten into every engine's manifest variant. */
-  private[store] def publishCheckpointV2(
+  private def publishCheckpointV2(
       spark: SparkSession, fsu: Fs, logDir: HPath, v: Long,
       manifestRows: Seq[org.apache.spark.sql.Row],
-      fileRows: Seq[org.apache.spark.sql.Row],
-      baseSchema: StructType): Unit = {
+      fileRows: Seq[org.apache.spark.sql.Row]): Unit = {
     import org.apache.spark.sql.Row
     val sidecarDir = new HPath(logDir, "_sidecars")
     fsu.mkdirs(sidecarDir)
     val sideName = s"${UUID.randomUUID()}.parquet"
     val sideDest = new HPath(sidecarDir, sideName)
-    writeParquetFile(spark, fsu, logDir, fileRows, baseSchema, sideDest)
+    writeParquetFile(spark, fsu, logDir, fileRows, checkpointSchema, sideDest)
     val sideStat = fsu.fs.getFileStatus(sideDest)
     val cmT = StructType(Seq(
       StructField("version", LongType),
@@ -506,10 +395,10 @@ object DeltaLogMirror {
       StructField("sizeInBytes", LongType),
       StructField("modificationTime", LongType),
       StructField("tags", MapType(StringType, StringType))))
-    val schema = StructType(baseSchema.fields ++ Seq(
+    val schema = StructType(checkpointSchema.fields ++ Seq(
       StructField("checkpointMetadata", cmT), StructField("sidecar", scT)))
     val pad = Seq(null, null)
-    val blank = Seq.fill[Any](baseSchema.size)(null)
+    val blank = Seq.fill[Any](checkpointSchema.size)(null)
     val rows: Seq[Row] = manifestRows.map(r => Row.fromSeq(r.toSeq ++ pad)) ++ Seq(
       Row.fromSeq(blank ++ Seq(Row(v, Map.empty[String, String]), null)),
       Row.fromSeq(blank ++ Seq(null,
@@ -520,10 +409,72 @@ object DeltaLogMirror {
     writeLastCheckpoint(fsu, logDir, v, (rows.size + fileRows.size).toLong, None)
   }
 
-  /** The protocol checkpoint row schema (public Delta transaction protocol;
-    * optional action columns omitted stay absent — readers treat missing
-    * nullable columns as null). */
-  private[store] val checkpointSchema: StructType = StructType(Seq(
+  /** Protocol checkpoint of snapshot `s` at version `v` — the one
+    * checkpoint writer, shared by the graft-manifest mirror and the foreign
+    * writer. Faithful to the table: its protocol (reader/writer features
+    * included), metaData with its partitionColumns, every live add with its
+    * partitionValues, stats, deletion vector, row-tracking fields and real
+    * modificationTime (dataChange false per the checkpoint spec), the
+    * unexpired remove tombstones (PROTOCOL.md requires them in checkpoints
+    * — other engines' VACUUM depends on them; expiry honors
+    * `delta.deletedFileRetentionDuration`, default one week), the live
+    * domain metadata and the SetTransaction watermarks. Published classic
+    * (multi-part under `delta.checkpoint.partSize`), or as a V2 manifest +
+    * sidecar when the table's `delta.checkpointPolicy` is `v2`. The JSON
+    * commits stay: checkpoints are purely additive. */
+  private[store] def writeCheckpoint(
+      spark: SparkSession, fsu: Fs, logDir: HPath, v: Long, s: DeltaTable.Snapshot): Unit = {
+    import org.apache.spark.sql.Row
+    val now = System.currentTimeMillis()
+    val keepSince = now - ForeignDeltaTable.retentionMillis(
+      s.configuration.get("delta.deletedFileRetentionDuration"))
+    def emptyTo[A](xs: Seq[A]): Seq[A] = if (xs.isEmpty) null else xs
+    val protoRow = Row(
+      Row(s.minReaderVersion, s.minWriterVersion,
+        emptyTo(s.readerFeatures), emptyTo(s.writerFeatures)),
+      null, null, null, null, null)
+    val tableId = if (s.tableId.nonEmpty) s.tableId else UUID.randomUUID().toString
+    val metaRow = Row(null,
+      Row(tableId, null, null, Row("parquet", Map.empty[String, String]),
+        s.schema.json, s.partitionColumns, s.configuration, now),
+      null, null, null, null)
+    val addRows = s.adds.map { a =>
+      Row(null, null,
+        Row(a.rawPath, a.partitionValues.map { case (k, ov) => k -> ov.orNull },
+          a.size, a.mtime, false, a.statsJson.orNull,
+          a.dv.map(d => Row(d.storageType, d.pathOrInlineDv,
+            d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull,
+          a.baseRowId.map(Long.box).orNull,
+          a.defaultRowCommitVersion.map(Long.box).orNull),
+        null, null, null)
+    }
+    // ts 0 = the log carried no deletionTimestamp: keep (sound — dropping
+    // a live tombstone could let a foreign VACUUM miss the file)
+    val rmRows = s.tombstones
+      .filter { case (_, ts) => ts == 0L || ts >= keepSince }
+      .map { case (p, ts) => Row(null, null, null, Row(p, ts, false), null, null) }
+    val dmRows = s.domainMetadata.toSeq.sortBy(_._1).map { case (name, cfg) =>
+      Row(null, null, null, null, Row(name, cfg, false), null)
+    }
+    val txnRows = s.txns.toSeq.sortBy(_._1).map { case (appId, tv) =>
+      Row(null, null, null, null, null, Row(appId, tv, null))
+    }
+    // delta.checkpointPolicy = v2 on a v2Checkpoint table: the owner chose
+    // the V2 spec — honor it (manifest + file-action sidecar) instead of
+    // emitting a classic checkpoint the policy forbids
+    if (s.configuration.get("delta.checkpointPolicy").contains("v2") &&
+        s.readerFeatures.contains("v2Checkpoint"))
+      publishCheckpointV2(spark, fsu, logDir, v,
+        Seq(protoRow, metaRow) ++ dmRows ++ txnRows, addRows ++ rmRows)
+    else
+      publishCheckpoint(spark, fsu, logDir, v,
+        Seq(protoRow, metaRow) ++ addRows ++ rmRows ++ dmRows ++ txnRows,
+        partSize = positiveLongProp(s.configuration, "delta.checkpoint.partSize"))
+  }
+
+  /** The checkpoint action-row schema (PROTOCOL.md checkpoint spec; absent
+    * optional columns read as null). */
+  private val checkpointSchema: StructType = StructType(Seq(
     StructField("protocol", StructType(Seq(
       StructField("minReaderVersion", IntegerType),
       StructField("minWriterVersion", IntegerType),
@@ -546,12 +497,23 @@ object DeltaLogMirror {
       StructField("size", LongType),
       StructField("modificationTime", LongType),
       StructField("dataChange", BooleanType),
+      StructField("stats", StringType),
       StructField("deletionVector", StructType(Seq(
         StructField("storageType", StringType),
         StructField("pathOrInlineDv", StringType),
         StructField("offset", IntegerType),
         StructField("sizeInBytes", IntegerType),
-        StructField("cardinality", LongType))))))),
+        StructField("cardinality", LongType)))),
+      StructField("baseRowId", LongType),
+      StructField("defaultRowCommitVersion", LongType)))),
+    StructField("remove", StructType(Seq(
+      StructField("path", StringType),
+      StructField("deletionTimestamp", LongType),
+      StructField("dataChange", BooleanType)))),
+    StructField("domainMetadata", StructType(Seq(
+      StructField("domain", StringType),
+      StructField("configuration", StringType),
+      StructField("removed", BooleanType)))),
     StructField("txn", StructType(Seq(
       StructField("appId", StringType),
       StructField("version", LongType),

@@ -1,7 +1,5 @@
 package graft.store
 
-import scala.jdk.CollectionConverters._
-
 import com.fasterxml.jackson.databind.JsonNode
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
@@ -50,14 +48,14 @@ import org.apache.spark.sql.types._
 object DeltaTable {
   import VersionedTable.mapper
 
-  private val CommitRe = """(\d{20})\.json""".r
-  private val CheckpointRe = """(\d{20})\.checkpoint\.parquet""".r
-  private val MultiCheckpointRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
+  private[store] val CommitRe = """(\d{20})\.json""".r
+  private[store] val CheckpointRe = """(\d{20})\.checkpoint\.parquet""".r
+  private[store] val MultiCheckpointRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
   // v2 checkpoints: <version>.checkpoint.<unique>.{json,parquet} manifest
   // carrying non-file actions + `sidecar` pointers into _delta_log/_sidecars/
   // (PROTOCOL.md "V2 Spec Checkpoints"). The unique part is a UUID, so the
   // two numeric groups of a multi-part classic name never match it.
-  private val V2CheckpointRe = """(\d{20})\.checkpoint\.([0-9a-zA-Z-]+)\.(json|parquet)""".r
+  private[store] val V2CheckpointRe = """(\d{20})\.checkpoint\.([0-9a-zA-Z-]+)\.(json|parquet)""".r
 
   /** Reader-relevant table features this reader actually implements.
     * (`vacuumProtocolCheck` constrains VACUUM — which
@@ -257,13 +255,11 @@ object DeltaTable {
       if (!fsu.exists(p)) throw new IllegalStateException(
         s"change feed of $path: commit $v's JSON was log-cleaned — its " +
           "row-level changes are unrecoverable")
-      val nodes = fsu.readString(p).split('\n').filter(_.nonEmpty).toSeq
-        .map(mapper.readTree)
+      val actions = DeltaActions.read(fsu, p)
       // ICT tables: the embedded monotonic clock outranks both the
       // commitInfo.timestamp field and the file mtime
-      val ts = nodes.find(_.has("commitInfo")).map(_.get("commitInfo"))
-        .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong())
-          .orElse(Option(ci.get("timestamp")).map(_.asLong())))
+      val ts = actions.collectFirst { case ci: DeltaActions.CommitInfo => ci }
+        .flatMap(ci => ci.inCommitTimestamp.orElse(ci.timestamp))
         .getOrElse(fsu.fs.getFileStatus(p).getModificationTime)
       def stamp(df: DataFrame, changeType: Option[String]): DataFrame = {
         val ct = changeType.map(lit(_).as(ChangeTypeCol))
@@ -271,7 +267,7 @@ object DeltaTable {
         df.select(aligned(df) ++ Seq(ct,
           lit(v).as(VersionCol), timestamp_millis(lit(ts)).as(CommitTsCol)): _*)
       }
-      val cdcs = nodes.filter(_.has("cdc")).map(_.get("cdc"))
+      val cdcs = actions.collect { case c: DeltaActions.Cdc => c }
       if (cdcs.nonEmpty) {
         // cdc-bearing commits are consumed from their change files ALONE
         val snapV = snapshot(spark, path, versionAsOf = Some(v))
@@ -279,23 +275,18 @@ object DeltaTable {
         pv.prepareSession(spark)
         val dataSchema = StructType(
           pv.dataSchema.fields :+ StructField(ChangeTypeCol, StringType))
-        val entries = cdcs.map { c =>
-          val pvs = Option(c.get("partitionValues")).map(_.fields().asScala.map { e =>
-            e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-          }.toMap).getOrElse(Map.empty[String, Option[String]])
-          DeltaFileEntry(resolvePath(root, c.get("path").asText()),
-            c.get("size").asLong(), 0L, pvs, None)
-        }
+        val entries = cdcs.map(c =>
+          DeltaFileEntry(resolvePath(root, c.path), c.size, 0L, c.partitionValues, None))
         val scanned = DeltaFileIndex.scan(spark, root, entries, pv.partSchema, dataSchema)
           .select(pv.logicalCols :+ col(s"`$ChangeTypeCol`"): _*)
         Some(stamp(scanned, None))
       } else {
-        def dc(n: JsonNode): Boolean =
-          Option(n.get("dataChange")).forall(_.asBoolean(true))
-        val addPaths = nodes.filter(_.has("add")).map(_.get("add"))
-          .filter(dc).map(_.get("path").asText()).toSet
-        val rmPaths = nodes.filter(_.has("remove")).map(_.get("remove"))
-          .filter(dc).map(_.get("path").asText()).toSet
+        val addPaths = actions.collect {
+          case DeltaActions.AddFile(a, true) => a.rawPath
+        }.toSet
+        val rmPaths = actions.collect {
+          case r: DeltaActions.RemoveFile if r.dataChange => r.path
+        }.toSet
         val ins =
           if (addPaths.isEmpty) None
           else Some(stamp(readAddsWhere(spark, path,
@@ -498,17 +489,10 @@ object DeltaTable {
     try {
       val br = new java.io.BufferedReader(
         new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
-      var line = br.readLine()
-      while (line != null) {
-        if (line.nonEmpty) {
-          val n = mapper.readTree(line)
-          if (n.has("commitInfo"))
-            return Option(n.get("commitInfo").get("inCommitTimestamp"))
-              .map(_.asLong())
-        }
-        line = br.readLine()
-      }
-      None
+      Iterator.continually(br.readLine()).takeWhile(_ != null).filter(_.nonEmpty)
+        .flatMap(DeltaActions.decode)
+        .collectFirst { case ci: DeltaActions.CommitInfo => ci.inCommitTimestamp }
+        .flatten
     } finally in.close()
   }
 
@@ -524,47 +508,30 @@ object DeltaTable {
     val logDir = new HPath(path, "_delta_log")
     val statuses: Seq[FileStatus] =
       if (fsu.isDir(logDir)) fsu.fs.listStatus(logDir).toSeq.filter(_.isFile) else Nil
-    val commits: Map[Long, FileStatus] = statuses.flatMap { st =>
-      st.getPath.getName match {
-        case CommitRe(v) => Some(v.toLong -> st)
-        case _ => None
-      }
-    }.toMap
+    val named = statuses.map(st => st.getPath.getName -> st)
+    val commits: Map[Long, FileStatus] =
+      named.collect { case (CommitRe(v), st) => v.toLong -> st }.toMap
     // version-checksum sidecars, already in the same listing (no extra
     // RPC): when one exists for the resolved version, the reconstructed
     // snapshot is verified against it below
-    val crcs: Map[Long, HPath] = statuses.flatMap { st =>
-      st.getPath.getName match {
-        case VersionChecksum.CrcRe(v) => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.toMap
+    val crcs: Map[Long, HPath] =
+      named.collect { case (VersionChecksum.CrcRe(v), st) => v.toLong -> st.getPath }.toMap
     // classic checkpoints: single-file, or multi-part keyed by (version, numParts)
-    val singleCps: Map[Long, Seq[HPath]] = statuses.flatMap { st =>
-      st.getPath.getName match {
-        case CheckpointRe(v) => Some(v.toLong -> Seq(st.getPath))
-        case _ => None
-      }
-    }.toMap
-    val multiCps: Map[Long, Seq[HPath]] = statuses.flatMap { st =>
-      st.getPath.getName match {
-        case MultiCheckpointRe(v, part, of) => Some((v.toLong, of.toInt, part.toInt, st.getPath))
-        case _ => None
-      }
+    val singleCps: Map[Long, Seq[HPath]] =
+      named.collect { case (CheckpointRe(v), st) => v.toLong -> Seq(st.getPath) }.toMap
+    val multiCps: Map[Long, Seq[HPath]] = named.collect {
+      case (MultiCheckpointRe(v, part, of), st) => (v.toLong, of.toInt, part.toInt, st.getPath)
     }.groupBy { case (v, of, _, _) => (v, of) }.collect {
       // only COMPLETE part sets are usable
       case ((v, of), parts) if parts.map(_._3).toSet == (1 to of).toSet =>
         v -> parts.sortBy(_._3).map(_._4)
-    }.toMap
+    }
     val checkpoints = singleCps ++ multiCps
     // v2 checkpoints: any manifest per version is complete by spec; pick
     // the lexicographically greatest name for determinism
-    val v2Cps: Map[Long, HPath] = statuses.flatMap { st =>
-      st.getPath.getName match {
-        case V2CheckpointRe(v, _, _) => Some(v.toLong -> st.getPath)
-        case _ => None
-      }
-    }.groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).maxBy(_.getName) }
+    val v2Cps: Map[Long, HPath] =
+      named.collect { case (V2CheckpointRe(v, _, _), st) => v.toLong -> st.getPath }
+        .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).maxBy(_.getName) }
     if (commits.isEmpty && checkpoints.isEmpty && v2Cps.isEmpty)
       throw new IllegalArgumentException(s"$path is not a Delta table: no _delta_log commits")
     val latest = (commits.keySet ++ checkpoints.keySet ++ v2Cps.keySet).max
@@ -612,245 +579,143 @@ object DeltaTable {
         s"commit $v missing from $logDir — cannot reconstruct version $target")
     }
 
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Nil
-    var config: Map[String, String] = Map.empty
-    var tableId: String = ""
-    var minWriter: Int = 1
-    var writerFeats: Seq[String] = Nil
-    var minReader: Int = 1
-    var readerFeats: Seq[String] = Nil
-    val files = scala.collection.mutable.LinkedHashMap[String, Add]()
-    // remove tombstones; a re-add of the same path cancels its tombstone
-    val gone = scala.collection.mutable.LinkedHashMap[String, Long]()
-    // live domain metadata (removed=true drops the domain)
-    val domains = scala.collection.mutable.LinkedHashMap[String, String]()
-    // SetTransaction watermarks (last action per appId wins, replay order)
-    val txns = scala.collection.mutable.LinkedHashMap[String, Long]()
-
-    def checkProtocol(minReader: Int, readerFeatures: Seq[String]): Unit = {
-      val unsupported = readerFeatures.filterNot(SupportedReaderFeatures)
-      if (minReader > 3 || (minReader == 3 && unsupported.nonEmpty))
-        throw new UnsupportedOperationException(
-          s"Delta table $path requires reader version $minReader with features " +
-            s"${unsupported.mkString(", ")} — not supported by this reader")
+    // ---- checkpoint state (classic parquet parts, or v2 manifest+sidecars):
+    // each frame lists live adds and unexpired tombstones side by side
+    val replay = new Replay()
+    def applyFrame(actions: Seq[DeltaActions.Action]): Seq[String] = {
+      actions.foreach(replay(_, checkpointFrame = true))
+      actions.collect { case DeltaActions.Sidecar(p) => p }
     }
-    def checkConfig(): Unit = {
-      val cm = config.getOrElse("delta.columnMapping.mode", "none")
-      // name mode scans by physical name; id mode rides Spark's parquet
-      // field-id resolution (read() wires both); anything else is a
-      // protocol we don't know → loud refusal, not a misread
-      if (cm != "none" && cm != "name" && cm != "id")
-        throw new UnsupportedOperationException(
-          s"Delta table $path uses column mapping mode '$cm' — not supported")
-    }
-    // deletion vectors are read natively (read() filters the marked row
-    // indexes via _metadata.row_index); the descriptor just rides the Add
-
-    // one parquet action-frame (classic checkpoint, v2 manifest, or v2
-    // sidecar): protocol/metaData when present, live adds into `files`
-    def processActionFrame(df: DataFrame): Unit = {
-      def sub(action: String): Option[StructType] =
-        df.schema.fields.find(_.name == action).map(_.dataType.asInstanceOf[StructType])
-      sub("protocol").foreach { ps =>
-        df.select("protocol.*").where(col("minReaderVersion").isNotNull).collect().foreach { r =>
-          val feats =
-            if (ps.fieldNames.contains("readerFeatures") && !r.isNullAt(r.fieldIndex("readerFeatures")))
-              r.getSeq[String](r.fieldIndex("readerFeatures"))
-            else Nil
-          checkProtocol(r.getInt(r.fieldIndex("minReaderVersion")), feats)
-          minReader = r.getInt(r.fieldIndex("minReaderVersion"))
-          readerFeats = feats
-          if (ps.fieldNames.contains("minWriterVersion") && !r.isNullAt(r.fieldIndex("minWriterVersion")))
-            minWriter = r.getInt(r.fieldIndex("minWriterVersion"))
-          if (ps.fieldNames.contains("writerFeatures") && !r.isNullAt(r.fieldIndex("writerFeatures")))
-            writerFeats = r.getSeq[String](r.fieldIndex("writerFeatures"))
-        }
-      }
-      if (sub("metaData").isDefined)
-        df.select("metaData.*").where(col("schemaString").isNotNull).collect().foreach { r =>
-          schemaJson = Some(r.getString(r.fieldIndex("schemaString")))
-          tableId = r.getString(r.fieldIndex("id"))
-          partCols = r.getSeq[String](r.fieldIndex("partitionColumns"))
-          config = Option(r.getJavaMap[String, String](r.fieldIndex("configuration")))
-            .map(_.asScala.toMap).getOrElse(Map.empty)
-        }
-      val addFields = sub("add").map(_.fieldNames.toSet).getOrElse(Set.empty)
-      if (addFields.nonEmpty) {
-        val dvCol =
-          if (addFields.contains("deletionVector"))
-            col("add.deletionVector").cast(
-              "struct<storageType:string,pathOrInlineDv:string,offset:int," +
-                "sizeInBytes:int,cardinality:bigint>")
-          else org.apache.spark.sql.functions.lit(null).cast(
-            "struct<storageType:string,pathOrInlineDv:string,offset:int," +
-              "sizeInBytes:int,cardinality:bigint>")
-        val statsCol =
-          if (addFields.contains("stats")) col("add.stats")
-          else org.apache.spark.sql.functions.lit(null).cast("string")
-        def optLong(name: String) =
-          if (addFields.contains(name)) col(s"add.$name").cast("long")
-          else org.apache.spark.sql.functions.lit(null).cast("long")
-        df.where(col("add.path").isNotNull)
-          .select(col("add.path"), col("add.partitionValues"), col("add.size"),
-            col("add.modificationTime"), statsCol.as("stats"), dvCol.as("dv"),
-            optLong("baseRowId"), optLong("defaultRowCommitVersion"))
-          .collect().foreach { r =>
-            val dv = Option(r.getStruct(5)).map(d => DeletionVectors.Descriptor(
-              d.getString(0), d.getString(1),
-              if (d.isNullAt(2)) None else Some(d.getInt(2)),
-              d.getInt(3), d.getLong(4)))
-            val pv = Option(r.getJavaMap[String, String](1))
-              .map(_.asScala.map { case (k, v) => k -> Option(v) }.toMap)
-              .getOrElse(Map.empty[String, Option[String]])
-            files(r.getString(0)) = Add(r.getString(0), r.getLong(2), r.getLong(3),
-              pv, Option(r.getString(4)), dv,
-              if (r.isNullAt(6)) None else Some(r.getLong(6)),
-              if (r.isNullAt(7)) None else Some(r.getLong(7)))
-          }
-      }
-      if (df.schema.fieldNames.contains("domainMetadata"))
-        df.where(col("domainMetadata.domain").isNotNull)
-          .select(col("domainMetadata.domain"), col("domainMetadata.configuration"),
-            col("domainMetadata.removed"))
-          .collect().foreach { r =>
-            if (!r.isNullAt(2) && r.getBoolean(2)) domains.remove(r.getString(0)): Unit
-            else domains(r.getString(0)) = r.getString(1)
-          }
-      if (df.schema.fieldNames.contains("txn"))
-        df.where(col("txn.appId").isNotNull)
-          .select(col("txn.appId"), col("txn.version").cast("long"))
-          .collect().foreach(r => txns(r.getString(0)) = r.getLong(1))
-      // checkpoint remove rows are pure tombstones (their file set is
-      // disjoint from the checkpoint's adds) — retained for re-checkpointing
-      val rmFields = sub("remove").map(_.fieldNames.toSet).getOrElse(Set.empty)
-      if (rmFields.nonEmpty) {
-        val tsCol =
-          if (rmFields.contains("deletionTimestamp")) col("remove.deletionTimestamp")
-          else org.apache.spark.sql.functions.lit(0L)
-        df.where(col("remove.path").isNotNull)
-          .select(col("remove.path"), tsCol.cast("long").as("ts"))
-          .collect().foreach(r =>
-            gone(r.getString(0)) = if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-    }
-
-    // one JSON action line (commit tail or v2 json manifest)
-    def applyJsonAction(node: JsonNode): Unit = {
-      if (node.has("protocol")) {
-        val p = node.get("protocol")
-        val feats = Option(p.get("readerFeatures"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-        checkProtocol(p.get("minReaderVersion").asInt(), feats)
-        minReader = p.get("minReaderVersion").asInt()
-        readerFeats = feats
-        minWriter = Option(p.get("minWriterVersion")).map(_.asInt()).getOrElse(1)
-        writerFeats = Option(p.get("writerFeatures")).filterNot(_.isNull)
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-      }
-      if (node.has("metaData")) {
-        val md = node.get("metaData")
-        schemaJson = Some(md.get("schemaString").asText())
-        tableId = Option(md.get("id")).map(_.asText()).getOrElse("")
-        partCols = Option(md.get("partitionColumns"))
-          .map(_.elements().asScala.map(_.asText()).toSeq).getOrElse(Nil)
-        config = Option(md.get("configuration")).map(_.fields().asScala
-          .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
-          .getOrElse(Map.empty)
-      }
-      if (node.has("add")) {
-        val a = node.get("add")
-        val dv = Option(a.get("deletionVector")).filterNot(_.isNull).map { d =>
-          DeletionVectors.Descriptor(
-            d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
-            Option(d.get("offset")).filterNot(_.isNull).map(_.asInt()),
-            d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())
-        }
-        val p = a.get("path").asText()
-        val pv = Option(a.get("partitionValues")).map(_.fields().asScala.map { e =>
-          e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-        }.toMap).getOrElse(Map.empty[String, Option[String]])
-        files(p) = Add(p, a.get("size").asLong(),
-          Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L),
-          pv, Option(a.get("stats")).filterNot(_.isNull).map(_.asText()), dv,
-          Option(a.get("baseRowId")).filterNot(_.isNull).map(_.asLong()),
-          Option(a.get("defaultRowCommitVersion")).filterNot(_.isNull).map(_.asLong()))
-        gone.remove(p): Unit
-      }
-      if (node.has("remove")) {
-        val rm = node.get("remove")
-        val p = rm.get("path").asText()
-        files.remove(p)
-        gone(p) = Option(rm.get("deletionTimestamp")).filterNot(_.isNull)
-          .map(_.asLong()).getOrElse(0L)
-      }
-      if (node.has("domainMetadata")) {
-        val dm = node.get("domainMetadata")
-        val name = dm.get("domain").asText()
-        if (Option(dm.get("removed")).exists(_.asBoolean(false)))
-          domains.remove(name): Unit
-        else domains(name) =
-          Option(dm.get("configuration")).map(_.asText()).getOrElse("{}")
-      }
-      if (node.has("txn")) {
-        val t = node.get("txn")
-        txns(t.get("appId").asText()) = t.get("version").asLong()
-      }
-    }
-
-    // ---- checkpoint state (classic parquet parts, or v2 manifest+sidecars)
     cpVersion.foreach { cp =>
-      if (checkpoints.contains(cp))
-        processActionFrame(spark.read.parquet(checkpoints(cp).map(_.toString): _*))
+      if (checkpoints.contains(cp)) applyFrame(checkpointFrame(spark, checkpoints(cp)))
       else {
         val manifest = v2Cps(cp)
-        val sidecars = scala.collection.mutable.ArrayBuffer[String]()
-        if (manifest.getName.endsWith(".json"))
-          fsu.readString(manifest).split('\n').filter(_.nonEmpty).foreach { line =>
-            val node = mapper.readTree(line)
-            applyJsonAction(node)
-            if (node.has("sidecar")) sidecars += node.get("sidecar").get("path").asText()
-          }
-        else {
-          val df = spark.read.parquet(manifest.toString)
-          processActionFrame(df)
-          if (df.schema.fieldNames.contains("sidecar"))
-            df.where(col("sidecar.path").isNotNull).select("sidecar.path").collect()
-              .foreach(r => sidecars += r.getString(0))
-        }
+        val sidecars = applyFrame(
+          if (manifest.getName.endsWith(".json")) DeltaActions.read(fsu, manifest)
+          else checkpointFrame(spark, Seq(manifest)))
         // sidecar paths are file names under _delta_log/_sidecars/ (or
         // absolute URIs); each holds add/remove actions only
-        val sidecarDir = new HPath(logDir, "_sidecars")
-        val paths = sidecars.toSeq.map { p =>
-          val u = new java.net.URI(p)
-          if (u.isAbsolute) new HPath(u) else new HPath(sidecarDir, u.getPath)
-        }
-        if (paths.nonEmpty)
-          processActionFrame(spark.read.parquet(paths.map(_.toString): _*))
+        val paths = sidecars.map(resolvePath(new HPath(logDir, "_sidecars"), _))
+        if (paths.nonEmpty) applyFrame(checkpointFrame(spark, paths))
       }
     }
 
     // ---- JSON tail
     (replayFrom to target).foreach { v =>
-      fsu.readString(commits(v).getPath).split('\n').filter(_.nonEmpty)
-        .foreach(line => applyJsonAction(mapper.readTree(line)))
+      DeltaActions.read(fsu, commits(v).getPath).foreach(replay(_))
     }
 
-    checkConfig()
-    val schema = schemaJson match {
-      case Some(j) => DataType.fromJson(j).asInstanceOf[StructType]
-      case None => throw new IllegalArgumentException(
-        s"no metaData action found up to version $target in $logDir")
-    }
-    val out = Snapshot(target, schema, partCols, config, files.values.toSeq,
-      tableId, minWriter, writerFeats, minReader, readerFeats, gone.toSeq,
-      domains.toMap, txns.toMap)
+    val proto = replay.protocol
+    val unsupported = proto.readerFeatures.filterNot(SupportedReaderFeatures)
+    if (proto.minReader > 3 || (proto.minReader == 3 && unsupported.nonEmpty))
+      throw new UnsupportedOperationException(
+        s"Delta table $path requires reader version ${proto.minReader} with features " +
+          s"${unsupported.mkString(", ")} — not supported by this reader")
+    // name mode scans by physical name; id mode rides Spark's parquet
+    // field-id resolution (read() wires both); anything else is a protocol
+    // we don't know → loud refusal, not a misread. Deletion vectors are
+    // read natively (read() filters the marked row indexes via
+    // _metadata.row_index); the descriptor just rides the Add.
+    val cm = replay.configuration.getOrElse("delta.columnMapping.mode", "none")
+    if (cm != "none" && cm != "name" && cm != "id")
+      throw new UnsupportedOperationException(
+        s"Delta table $path uses column mapping mode '$cm' — not supported")
+    if (!replay.hasMetaData) throw new IllegalArgumentException(
+      s"no metaData action found up to version $target in $logDir")
+    val out = replay.snapshot(target)
     // checksum cross-check (advisory sidecar, strict when present): a
     // mismatch means this replay did not see the log the committing writer
     // saw — truncated copy, deleted commit, doctored add — and reading on
     // would silently serve wrong data
     crcs.get(target).foreach(p => VersionChecksum.verify(fsu, p, out))
     out
+  }
+
+  /** The one replay accumulator: folds decoded log actions, in log order,
+    * into a [[Snapshot]] — behind [[snapshot]] and the graft mirror's
+    * state ([[DeltaLogMirror]]). Two modes per action:
+    *  - commit mode (a JSON commit): a `remove` drops its file and leaves a
+    *    tombstone; an `add` (re)places its file and cancels the path's
+    *    tombstone;
+    *  - checkpoint-frame mode: a checkpoint lists the live adds and the
+    *    unexpired tombstones side by side — under deletion vectors one
+    *    path can be in both — so a `remove` is a tombstone only.
+    * `from` seeds the state (the mirror advances its last snapshot by the
+    * lines it just published). */
+  private[store] final class Replay(seed: Option[Snapshot] = None) {
+    private var schemaJson: Option[String] = None
+    private var schema: Option[StructType] = seed.map(_.schema)
+    private var partCols: Seq[String] = seed.map(_.partitionColumns).getOrElse(Nil)
+    private var config: Map[String, String] = seed.map(_.configuration).getOrElse(Map.empty)
+    private var tableId: String = seed.map(_.tableId).getOrElse("")
+    private var proto = seed.map(s => DeltaActions.Protocol(s.minReaderVersion,
+      s.minWriterVersion, s.readerFeatures, s.writerFeatures))
+      .getOrElse(DeltaActions.Protocol(1, 1, Nil, Nil))
+    private val files = scala.collection.mutable.LinkedHashMap[String, Add]()
+    private val gone = scala.collection.mutable.LinkedHashMap[String, Long]()
+    private val domains = scala.collection.mutable.LinkedHashMap[String, String]()
+    // SetTransaction watermarks: the last action per appId wins
+    private val txns = scala.collection.mutable.LinkedHashMap[String, Long]()
+    seed.foreach { s =>
+      s.adds.foreach(a => files(a.rawPath) = a)
+      gone ++= s.tombstones
+      domains ++= s.domainMetadata
+      txns ++= s.txns
+    }
+
+    def apply(action: DeltaActions.Action, checkpointFrame: Boolean = false): Unit =
+      action match {
+        case p: DeltaActions.Protocol => proto = p
+        case m: DeltaActions.MetaData =>
+          schemaJson = Some(m.schemaString); schema = None
+          tableId = m.id; partCols = m.partitionColumns; config = m.configuration
+        case DeltaActions.AddFile(a, _) =>
+          files(a.rawPath) = a
+          if (!checkpointFrame) gone.remove(a.rawPath): Unit
+        case r: DeltaActions.RemoveFile =>
+          if (!checkpointFrame) files.remove(r.path): Unit
+          gone(r.path) = r.deletionTimestamp
+        case d: DeltaActions.DomainMetadata =>
+          if (d.removed) domains.remove(d.domain): Unit
+          else domains(d.domain) = d.configuration
+        case t: DeltaActions.Txn => txns(t.appId) = t.version
+        case _ => ()
+      }
+
+    def protocol: DeltaActions.Protocol = proto
+    def configuration: Map[String, String] = config
+    def hasMetaData: Boolean = schema.isDefined || schemaJson.isDefined
+
+    def snapshot(version: Long): Snapshot = {
+      val sch = schema.getOrElse(
+        DataType.fromJson(schemaJson.get).asInstanceOf[StructType])
+      Snapshot(version, sch, partCols, config, files.values.toSeq, tableId,
+        proto.minWriter, proto.writerFeatures, proto.minReader, proto.readerFeatures,
+        gone.toSeq, domains.toMap, txns.toMap)
+    }
+  }
+
+  /** The action columns a checkpoint frame is read for. */
+  private val FrameActions =
+    Set("protocol", "metaData", "add", "remove", "txn", "domainMetadata", "sidecar")
+
+  /** Every action row of one checkpoint frame (classic checkpoint parts, a
+    * v2 parquet manifest, or v2 sidecars) in ONE collect: the action
+    * columns rendered as JSON lines and decoded like a commit. The
+    * checkpoint-only `*_parsed` structs (typed stats and partition values
+    * some writers add) are projected away first, so the driver holds only
+    * what the log's JSON form holds. */
+  private[store] def checkpointFrame(spark: SparkSession, parts: Seq[HPath]): Seq[DeltaActions.Action] = {
+    val df = spark.read.parquet(parts.map(_.toString): _*)
+    val cols = df.schema.fields.toSeq.filter(f => FrameActions(f.name)).map { f =>
+      val parsed = f.dataType match {
+        case st: StructType => st.fieldNames.filter(_.endsWith("_parsed")).toSeq
+        case _ => Nil
+      }
+      if (parsed.isEmpty) col(f.name) else col(f.name).dropFields(parsed: _*).as(f.name)
+    }
+    if (cols.isEmpty) Nil
+    else df.select(cols: _*).toJSON.collect().toSeq.flatMap(DeltaActions.decode)
   }
 
   /** Highest SetTransaction version another engine's writer recorded for

@@ -2,8 +2,6 @@ package graft.store
 
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,10 +81,7 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     if (!fsu.exists(p)) throw new IllegalArgumentException(
       s"commit $version of $path has no JSON commit file (checkpoint-only)")
     val root = new HPath(path)
-    val adds = fsu.readString(p).split('\n').filter(_.nonEmpty).toSeq
-      .map(mapper.readTree)
-      .filter(_.has("add"))
-      .map(_.get("add"))
+    val adds = DeltaActions.read(fsu, p).collect { case DeltaActions.AddFile(a, _) => a }
     if (adds.isEmpty)
       return spark.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](), s.schema)
@@ -100,16 +95,8 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     })
     val dataSchema = StructType(
       s.schema.fields.filterNot(f => lowerParts.contains(f.name.toLowerCase)))
-    val entries = adds.map { a =>
-      val raw = a.get("path").asText()
-      val u = new java.net.URI(raw)
-      val hp = if (u.isAbsolute) new HPath(u) else new HPath(root, u.getPath)
-      val pv = Option(a.get("partitionValues")).map(_.fields().asScala.map { e =>
-        e.getKey -> (if (e.getValue.isNull) None else Some(e.getValue.asText()))
-      }.toMap).getOrElse(Map.empty[String, Option[String]])
-      DeltaFileEntry(hp, a.get("size").asLong(),
-        Option(a.get("modificationTime")).map(_.asLong()).getOrElse(0L), pv, None)
-    }
+    val entries = adds.map(a => DeltaFileEntry(DeltaTable.resolvePath(root, a.rawPath),
+      a.size, a.mtime, a.partitionValues, None))
     DeltaFileIndex.scan(spark, root, entries, partSchema, dataSchema)
       .select(s.schema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
   }
@@ -416,7 +403,7 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     val rulesM = ColumnPolicies.rules(s.schema, s.configuration, providedGenM)
     val aligned = ColumnPolicies
       .enforce(align(srcGen, s.schema), s.schema, rulesM)
-      .localCheckpoint(true)
+      .transform(graft.operators.Caching.truncate)
     if (aligned.isEmpty) return s.version
     val srcKeys = aligned.select(keyCols.map(col): _*).distinct()
 
@@ -465,7 +452,7 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     // backstop (mirrors commitWrite's): under GENERATED ALWAYS, unmatched
     // source rows were ASSIGNED fresh values strictly past the mark — if
     // any exist, the mark MUST advance in this commit or the next append
-    // reassigns the same ids. One cheap pass over the (localCheckpoint'd)
+    // reassigns the same ids. One cheap pass over the (truncated)
     // source, only on the anomaly path.
     idSpecM.filterNot(_.allowExplicit).foreach { is =>
       if (metaSchemaM.isEmpty) {
@@ -878,11 +865,12 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     * reports an empty set. */
   private def commitRemoves(v: Long): Option[Set[String]] =
     scala.util.Try {
-      val nodes = fsu.readString(logPath(v)).split('\n')
-        .filter(_.nonEmpty).map(mapper.readTree)
-      if (nodes.exists(n => n.has("metaData") || n.has("protocol"))) None
-      else Some(nodes.filter(_.has("remove"))
-        .map(_.get("remove").get("path").asText).toSet)
+      val actions = DeltaActions.read(fsu, logPath(v))
+      if (actions.exists {
+        case _: DeltaActions.MetaData | _: DeltaActions.Protocol => true
+        case _ => false
+      }) None
+      else Some(actions.collect { case r: DeltaActions.RemoveFile => r.path }.toSet)
     }.toOption.flatten
 
   /** Set by every mutation attempt immediately before it publishes its
@@ -1827,18 +1815,18 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       ForeignDeltaTable.retentionMillis(
         s.configuration.get("delta.logRetentionDuration"),
         defaultMs = 30L * 24 * 3600 * 1000))
-    val JsonRe = """(\d{20})\.json""".r
-    val CpRe = """(\d{20})\.checkpoint(?:\..+)?\.parquet""".r
-    val V2Re = """(\d{20})\.checkpoint\.[0-9a-zA-Z-]+\.(?:json|parquet)""".r
     final case class LogF(
         st: org.apache.hadoop.fs.FileStatus, version: Long,
         isJson: Boolean, isV2: Boolean)
     val entries = fsu.fs.listStatus(logDir).toSeq.filter(_.isFile)
       .flatMap { st =>
         st.getPath.getName match {
-          case JsonRe(v) => Some(LogF(st, v.toLong, isJson = true, isV2 = false))
-          case V2Re(v) => Some(LogF(st, v.toLong, isJson = false, isV2 = true))
-          case CpRe(v) => Some(LogF(st, v.toLong, isJson = false, isV2 = false))
+          case DeltaTable.CommitRe(v) => Some(LogF(st, v.toLong, isJson = true, isV2 = false))
+          case DeltaTable.V2CheckpointRe(v, _, _) =>
+            Some(LogF(st, v.toLong, isJson = false, isV2 = true))
+          case DeltaTable.CheckpointRe(v) => Some(LogF(st, v.toLong, isJson = false, isV2 = false))
+          case DeltaTable.MultiCheckpointRe(v, _, _) =>
+            Some(LogF(st, v.toLong, isJson = false, isV2 = false))
           // crc sidecars expire with their commit (isJson: per-version
           // files that are never a history-floor candidate)
           case VersionChecksum.CrcRe(v) =>
@@ -1850,33 +1838,25 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     // a v2 manifest's sidecar refs; None when the manifest itself is
     // unreadable (a crashed partial write — never a usable floor)
     def sidecarRefsOf(e: LogF): Option[Seq[String]] = scala.util.Try {
-      if (e.st.getPath.getName.endsWith(".json"))
-        fsu.readString(e.st.getPath).split('\n').filter(_.contains("\"sidecar\""))
-          .toSeq.map(mapper.readTree).flatMap(n =>
-            Option(n.get("sidecar")).map(_.get("path").asText()))
-      else
-        spark.read.parquet(e.st.getPath.toString)
-          .select(col("sidecar.path")).na.drop()
-          .collect().toSeq.map(_.getString(0))
+      val p = e.st.getPath
+      (if (p.getName.endsWith(".json")) DeltaActions.read(fsu, p)
+       else DeltaTable.checkpointFrame(spark, Seq(p)))
+        .collect { case DeltaActions.Sidecar(ref) => ref }
     }.toOption
-    def resolveSidecar(p: String): HPath = {
-      val u = new java.net.URI(p)
-      if (u.isAbsolute) new HPath(u) else new HPath(new HPath(logDir, "_sidecars"), p)
-    }
+    def resolveSidecar(p: String): HPath =
+      DeltaTable.resolvePath(new HPath(logDir, "_sidecars"), p)
     // the history floor must be a USABLE checkpoint — deleting every
     // commit below an unusable one (crashed partial multipart write, v2
     // manifest with missing sidecars) would leave no way to reconstruct
     // state at the floor. Complete ⟺ a single-part file, OR a full
     // 1..n multipart set, OR a readable v2 manifest whose sidecars all
     // exist. Incomplete candidates fall back to the next older version.
-    val SingleRe = """\d{20}\.checkpoint\.parquet""".r
-    val MultiRe = """\d{20}\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
     def completeAt(v: Long): Boolean = {
       val grp = entries.filter(x => !x.isJson && x.version == v)
       val names = grp.map(_.st.getPath.getName)
-      val hasSingle = names.exists(n => SingleRe.pattern.matcher(n).matches())
+      val hasSingle = names.exists(n => DeltaTable.CheckpointRe.pattern.matcher(n).matches())
       lazy val multiOk = {
-        val parts = names.collect { case MultiRe(k, n) => (k.toInt, n.toInt) }
+        val parts = names.collect { case DeltaTable.MultiCheckpointRe(_, k, n) => (k.toInt, n.toInt) }
         parts.nonEmpty && parts.map(_._2).distinct.size == 1 &&
           parts.map(_._1).toSet == (1 to parts.head._2).toSet
       }
@@ -1937,74 +1917,8 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     val cur = DeltaTable.snapshot(spark, path, versionAsOf = Some(v))
     VersionChecksum.write(fsu, logDir, cur,
       DeltaTable.commitInfoIct(fsu, logPath(v)))
-    if (v % DeltaLogMirror.checkpointEvery(cur.configuration) == 0) writeCheckpoint(v, cur)
-  }
-
-  /** Classic parquet checkpoint + `_last_checkpoint` at version `v`, so a
-    * long-continued migration never forces readers (delta-spark, delta-rs,
-    * [[DeltaTable]] itself) to replay an unboundedly growing JSON tail —
-    * the same every-10-commits cadence delta-spark uses. Faithful to the
-    * foreign table: the TABLE's protocol (reader/writer features included),
-    * metaData with its partitionColumns, every live add with its
-    * partitionValues + stats + deletionVector, and the unexpired remove
-    * tombstones (PROTOCOL.md requires them in checkpoints — other engines'
-    * VACUUM depends on them; expiry honors
-    * `delta.deletedFileRetentionDuration`, default one week). */
-  private def writeCheckpoint(v: Long, s: DeltaTable.Snapshot): Unit = {
-    import org.apache.spark.sql.Row
-    val now = System.currentTimeMillis()
-    val keepSince = now - ForeignDeltaTable.retentionMillis(
-      s.configuration.get("delta.deletedFileRetentionDuration"))
-    def emptyTo[A](xs: Seq[A]): Seq[A] = if (xs.isEmpty) null else xs
-    val protoRow = Row(
-      Row(s.minReaderVersion, s.minWriterVersion,
-        emptyTo(s.readerFeatures), emptyTo(s.writerFeatures)),
-      null, null, null, null, null)
-    val metaRow = Row(null,
-      Row(tableIdOf(s), null, null, Row("parquet", Map.empty[String, String]),
-        s.schema.json, s.partitionColumns, s.configuration, now),
-      null, null, null, null)
-    val addRows = s.adds.map { a =>
-      Row(null, null,
-        Row(a.rawPath, a.partitionValues.map { case (k, ov) => k -> ov.orNull },
-          a.size, a.mtime, false, a.statsJson.orNull,
-          a.dv.map(d => Row(d.storageType, d.pathOrInlineDv,
-            d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality)).orNull,
-          a.baseRowId.map(Long.box).orNull,
-          a.defaultRowCommitVersion.map(Long.box).orNull),
-        null, null, null)
-    }
-    // ts 0 = the foreign log carried no deletionTimestamp: keep (sound —
-    // dropping a live tombstone could let a foreign VACUUM miss the file)
-    val rmRows = s.tombstones
-      .filter { case (_, ts) => ts == 0L || ts >= keepSince }
-      .map { case (p, ts) => Row(null, null, null, Row(p, ts, false), null, null) }
-    // live domain metadata must survive checkpointing (the domainMetadata
-    // feature's writer obligation — row tracking keeps its high-water
-    // mark here)
-    val dmRows = s.domainMetadata.toSeq.sortBy(_._1).map { case (name, cfg) =>
-      Row(null, null, null, null, Row(name, cfg, false), null)
-    }
-    // SetTransaction watermarks must survive checkpointing (PROTOCOL.md:
-    // dropping one would let a restarted external stream double-apply)
-    val txnRows = s.txns.toSeq.sortBy(_._1).map { case (appId, tv) =>
-      Row(null, null, null, null, null, Row(appId, tv, null))
-    }
-    // delta.checkpointPolicy = v2 on a v2Checkpoint table: the owner chose
-    // the V2 spec — honor it (manifest + file-action sidecar) instead of
-    // emitting a classic checkpoint the policy forbids
-    if (s.configuration.get("delta.checkpointPolicy").contains("v2") &&
-        s.readerFeatures.contains("v2Checkpoint"))
-      DeltaLogMirror.publishCheckpointV2(spark, fsu, logDir, v,
-        Seq(protoRow, metaRow) ++ dmRows ++ txnRows,
-        addRows ++ rmRows,
-        ForeignDeltaTable.checkpointSchema)
-    else
-      DeltaLogMirror.publishCheckpoint(spark, fsu, logDir, v,
-        Seq(protoRow, metaRow) ++ addRows ++ rmRows ++ dmRows ++ txnRows,
-        ForeignDeltaTable.checkpointSchema,
-        partSize = DeltaLogMirror.positiveLongProp(
-          s.configuration, "delta.checkpoint.partSize"))
+    if (v % DeltaLogMirror.checkpointEvery(cur.configuration) == 0)
+      DeltaLogMirror.writeCheckpoint(spark, fsu, logDir, v, cur)
   }
 }
 
@@ -2121,53 +2035,4 @@ object ForeignDeltaTable {
     }
   }
   private val IntervalRe = """interval\s+(\d+)\s+(\w+)""".r
-
-  /** Checkpoint action-row schema for foreign tables: the mirror's columns
-    * plus reader/writer features, partition metadata, per-file stats +
-    * deletion vectors, and remove tombstones (PROTOCOL.md checkpoint
-    * spec; absent optional columns read as null). */
-  private[store] val checkpointSchema: StructType = StructType(Seq(
-    StructField("protocol", StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("minWriterVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("writerFeatures", ArrayType(StringType))))),
-    StructField("metaData", StructType(Seq(
-      StructField("id", StringType),
-      StructField("name", StringType),
-      StructField("description", StringType),
-      StructField("format", StructType(Seq(
-        StructField("provider", StringType),
-        StructField("options", MapType(StringType, StringType))))),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType)),
-      StructField("createdTime", LongType)))),
-    StructField("add", StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("size", LongType),
-      StructField("modificationTime", LongType),
-      StructField("dataChange", BooleanType),
-      StructField("stats", StringType),
-      StructField("deletionVector", StructType(Seq(
-        StructField("storageType", StringType),
-        StructField("pathOrInlineDv", StringType),
-        StructField("offset", IntegerType),
-        StructField("sizeInBytes", IntegerType),
-        StructField("cardinality", LongType)))),
-      StructField("baseRowId", LongType),
-      StructField("defaultRowCommitVersion", LongType)))),
-    StructField("remove", StructType(Seq(
-      StructField("path", StringType),
-      StructField("deletionTimestamp", LongType),
-      StructField("dataChange", BooleanType)))),
-    StructField("domainMetadata", StructType(Seq(
-      StructField("domain", StringType),
-      StructField("configuration", StringType),
-      StructField("removed", BooleanType)))),
-    StructField("txn", StructType(Seq(
-      StructField("appId", StringType),
-      StructField("version", LongType),
-      StructField("lastUpdated", LongType))))))
 }

@@ -70,7 +70,7 @@ object StreamingIngest {
     * land in the maintainer's fixed order: a state derived from the files
     * it replaces is read before the overwrite, and a fold's refusal raises
     * inside the batch with nothing committed. */
-  private def truncate(out: DataFrame): DataFrame = out.localCheckpoint(true)
+  private def truncate(out: DataFrame): DataFrame = graft.operators.Caching.truncate(out)
 
   /** Append-only streaming ingest (the append_inserts load mode as a
     * stream): parquet dir → system cols → parquet sink, exactly-once via

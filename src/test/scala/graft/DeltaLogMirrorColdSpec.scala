@@ -1,6 +1,8 @@
 package graft
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 import graft.store.VersionedTable
 
@@ -29,5 +31,30 @@ class DeltaLogMirrorColdSpec extends SparkSuite {
 
     new VersionedTable(spark, root).append(Seq((3, "c")).toDF("id", "s")) // v3
     assert(actions(root, 3) == Seq("commitInfo", "add"))
+  }
+
+  /** Inputs whose effect a cold replay must rebuild exactly: a deletion
+    * vector on a live file, a widened column's `delta.typeChanges` trail,
+    * and a `graft.txn.*` watermark. */
+  private val inputs: Seq[(String, VersionedTable => Long)] = Seq(
+    "a DV delete" -> (_.delete(col("id") === 1)),
+    "a Full-drift type widening" -> (_.append(
+      Seq((3L, "c")).toDF("id", "s"), SchemaDrift.Full)),
+    "a graft.txn.* watermarked append" -> (_.appendIdempotent(
+      Seq((3, "c")).toDF("id", "s"), "appA", 4L)))
+
+  inputs.foreach { case (name, input) =>
+    test(s"after $name, a fresh handle's first commit mirrors what a warm handle's does") {
+      val root = tmpDir("dlm-cold-parity")
+      val t = new VersionedTable(spark, root)
+      t.append(Seq((1, "a"), (2, "b")).toDF("id", "s").coalesce(1)) // v0
+      input(t) // v1
+      def next(i: Int): DataFrame = Seq((i, "n")).toDF("id", "s")
+        .select(col("id").cast(t.schema("id").dataType).as("id"), col("s"))
+      val warm = t.append(next(10))
+      val cold = new VersionedTable(spark, root).append(next(11))
+      assert(cold == warm + 1)
+      assert(actions(root, cold) == actions(root, warm))
+    }
   }
 }

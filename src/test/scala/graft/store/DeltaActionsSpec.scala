@@ -80,6 +80,50 @@ class DeltaActionsSpec extends SparkSuite {
       """{"domainMetadata":{"domain":"delta.rowTracking","configuration":"{\"rowIdHighWaterMark\":67}","removed":false}}""")
   }
 
+  test("decode inverts the encoder for every action") {
+    import DeltaActions._
+    assert(decode(commitInfo(1000L, Some(1001L), "WRITE", Seq("mode" -> "Append"),
+      "graft-versioned-table")).contains(CommitInfo(Some(1000L), Some(1001L))))
+    assert(decode(commitInfo(7L, None, "CLONE", Nil, "e")).contains(CommitInfo(Some(7L), None)))
+    Seq(Protocol(1, 2, Nil, Nil), Protocol(1, 7, Nil, Seq("rowTracking")),
+      Protocol(3, 7, Seq("deletionVectors"), Seq("deletionVectors", "domainMetadata")))
+      .foreach { p =>
+        assert(decode(protocol(p.minReader, p.minWriter, p.readerFeatures,
+          p.writerFeatures)).contains(p))
+      }
+    val schema = rows(0, 1).schema.json
+    assert(decode(metaData("t-1", schema, Seq("p"), Map("delta.appendOnly" -> "true"), 5L))
+      .contains(MetaData("t-1", schema, Seq("p"), Map("delta.appendOnly" -> "true"))))
+    // an add with every optional field, a DV with its offset and a null
+    // partition value; an add whose inline DV has no offset
+    val full = file.copy(partitionValues = Map("p" -> None), baseRowId = Some(0L),
+      defaultRowCommitVersion = Some(1L), dv = Some(dv))
+    val inlineDv = DeltaTable.Add("data/x.parquet", 9L, 2L, Map.empty, None,
+      Some(DeletionVectors.Descriptor("i", "inline", None, 4, 1L)))
+    Seq(full -> false, file -> true, inlineDv -> true).foreach { case (a, dc) =>
+      assert(decode(add(a, dataChange = dc)).contains(AddFile(a, dc)))
+    }
+    assert(decode(remove(full, 5L, dataChange = false))
+      .contains(RemoveFile(full.rawPath, 5L, dataChange = false, Some(dv))))
+    assert(decode(remove(inlineDv, 6L, dataChange = true))
+      .contains(RemoveFile(inlineDv.rawPath, 6L, dataChange = true, inlineDv.dv)))
+    assert(decode(txn("app", 3L, 1000L)).contains(Txn("app", 3L)))
+    assert(decode(cdc("_change_data/c1/p=a/part-0.parquet", Seq("p" -> None), 982L))
+      .contains(Cdc("_change_data/c1/p=a/part-0.parquet", Map("p" -> None), 982L)))
+    val hwm = """{"rowIdHighWaterMark":67}"""
+    assert(decode(domainMetadata("delta.rowTracking", hwm))
+      .contains(DomainMetadata("delta.rowTracking", hwm, removed = false)))
+    // graft never removes a domain; other writers do
+    assert(decode(domainMetadata("delta.rowTracking", hwm)
+      .replace("\"removed\":false", "\"removed\":true"))
+      .contains(DomainMetadata("delta.rowTracking", hwm, removed = true)))
+    // sidecar pointers are written by the parquet v2 manifest only
+    assert(decode("""{"sidecar":{"path":"a.parquet","sizeInBytes":1,"modificationTime":2,"tags":{}}}""")
+      .contains(Sidecar("a.parquet")))
+    assert(decode("""{"checkpointMetadata":{"version":1,"tags":{}}}""").isEmpty)
+    assert(decode("{}").isEmpty)
+  }
+
   // ------------------------------------------------------- protocol replay
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()

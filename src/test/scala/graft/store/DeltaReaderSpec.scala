@@ -21,6 +21,43 @@ import graft.SparkSuite
 class DeltaReaderSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Row shape of the hand-built checkpoint fixtures: protocol, metaData,
+    * add (with its deletion vector) and txn columns — a checkpoint that
+    * omits the optional action columns, as other writers may. */
+  private val FixtureCheckpointSchema: StructType = StructType(Seq(
+    StructField("protocol", StructType(Seq(
+      StructField("minReaderVersion", IntegerType),
+      StructField("minWriterVersion", IntegerType),
+      StructField("readerFeatures", ArrayType(StringType)),
+      StructField("writerFeatures", ArrayType(StringType))))),
+    StructField("metaData", StructType(Seq(
+      StructField("id", StringType),
+      StructField("name", StringType),
+      StructField("description", StringType),
+      StructField("format", StructType(Seq(
+        StructField("provider", StringType),
+        StructField("options", MapType(StringType, StringType))))),
+      StructField("schemaString", StringType),
+      StructField("partitionColumns", ArrayType(StringType)),
+      StructField("configuration", MapType(StringType, StringType)),
+      StructField("createdTime", LongType)))),
+    StructField("add", StructType(Seq(
+      StructField("path", StringType),
+      StructField("partitionValues", MapType(StringType, StringType)),
+      StructField("size", LongType),
+      StructField("modificationTime", LongType),
+      StructField("dataChange", BooleanType),
+      StructField("deletionVector", StructType(Seq(
+        StructField("storageType", StringType),
+        StructField("pathOrInlineDv", StringType),
+        StructField("offset", IntegerType),
+        StructField("sizeInBytes", IntegerType),
+        StructField("cardinality", LongType))))))),
+    StructField("txn", StructType(Seq(
+      StructField("appId", StringType),
+      StructField("version", LongType),
+      StructField("lastUpdated", LongType))))))
+
   private def rm(path: String): Unit = {
     def loop(f: File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(loop)
@@ -247,7 +284,7 @@ class DeltaReaderSpec extends SparkSuite {
         fixtureSchema.json, Seq.empty[String], Map.empty[String, String], 1L), null, null),
       Row(null, null, Row(f1, Map.empty[String, String], s1, 2000L, false, null), null),
       Row(null, null, Row(f2, Map.empty[String, String], s2, 3000L, false, null), null))
-    val cpDf = spark.createDataFrame(cpRows.asJava, DeltaLogMirror.checkpointSchema).coalesce(1)
+    val cpDf = spark.createDataFrame(cpRows.asJava, FixtureCheckpointSchema).coalesce(1)
     val cpStage = tmpDir("dt-cpstage")
     cpDf.write.mode("overwrite").parquet(cpStage)
     val cpPart = new File(cpStage).listFiles()
@@ -361,7 +398,7 @@ class DeltaReaderSpec extends SparkSuite {
     val sideRows = Seq(
       Row(null, null, Row(f0, Map.empty[String, String], s0, 1000L, false, null), null),
       Row(null, null, Row(f1, Map.empty[String, String], s1, 2000L, false, null), null))
-    val sideDf = spark.createDataFrame(sideRows.asJava, DeltaLogMirror.checkpointSchema)
+    val sideDf = spark.createDataFrame(sideRows.asJava, FixtureCheckpointSchema)
       .coalesce(1)
     val stage = tmpDir("dt-v2j-stage")
     sideDf.write.mode("overwrite").parquet(stage)
@@ -403,12 +440,12 @@ class DeltaReaderSpec extends SparkSuite {
       StructField("path", StringType), StructField("sizeInBytes", LongType),
       StructField("modificationTime", LongType)))
     val manifestSchema = StructType(
-      DeltaLogMirror.checkpointSchema.fields.toSeq :+ StructField("sidecar", sidecarT))
+      FixtureCheckpointSchema.fields.toSeq :+ StructField("sidecar", sidecarT))
     // sidecar file itself uses the plain action shape
     val sideDf = spark.createDataFrame(
       Seq(Row(null, null,
         Row(f0, Map.empty[String, String], s0, 1000L, false, null), null)).asJava,
-      DeltaLogMirror.checkpointSchema).coalesce(1)
+      FixtureCheckpointSchema).coalesce(1)
     val stage = tmpDir("dt-v2p-stage")
     sideDf.write.mode("overwrite").parquet(stage)
     val sidePart = new File(stage).listFiles()
