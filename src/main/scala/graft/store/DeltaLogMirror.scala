@@ -60,23 +60,16 @@ final class DeltaLogMirror(
   // one cold replay per instance, then incremental
   private var cached: Option[DeltaTable.Snapshot] = None
 
-  private def lastVersion: Option[Long] = {
-    val vs = fsu.list(logDir).map(_.getName).collect { case LogName(v) => v.toLong }
-    if (vs.isEmpty) None else Some(vs.max)
-  }
-
   private def freshState: DeltaTable.Snapshot =
     DeltaTable.Snapshot(-1L, new StructType(), Nil, Map.empty, Nil,
       UUID.randomUUID().toString)
 
-  /** Replay own emitted actions — driver-side, tiny JSON files. */
-  private def replay(upTo: Long): DeltaTable.Snapshot = {
+  /** Replay own emitted commits (version-ordered) — driver-side, tiny
+    * JSON files. */
+  private def replay(commits: Seq[(Long, HPath)]): DeltaTable.Snapshot = {
     val r = new DeltaTable.Replay(Some(freshState))
-    (0L to upTo).foreach { v =>
-      val p = logPath(v)
-      if (fsu.exists(p)) DeltaActions.read(fsu, p).foreach(r(_))
-    }
-    r.snapshot(upTo)
+    commits.foreach { case (_, p) => DeltaActions.read(fsu, p).foreach(r(_)) }
+    r.snapshot(commits.last._1)
   }
 
   /** Mirror everything up to (and including) manifest `m`. Called after
@@ -90,11 +83,13 @@ final class DeltaLogMirror(
     * long-lived tables (a year of hourly syncs is ~9k commits; linear JSON
     * replay per read is the first thing a real deployment hits). */
   def sync(m: Manifest): Unit = {
-    val last = lastVersion
+    val commits = DeltaTable.listLog(fsu, logDir)
+      .collect { case DeltaTable.LogFile(st, v, DeltaTable.Commit) => v -> st.getPath }
+      .sortBy(_._1)
+    val last = commits.lastOption.map(_._1)
     if (last.exists(_ >= m.version)) return // already mirrored
     var state = cached.filter(s => last.contains(s.version))
-      .orElse(last.map(replay))
-      .getOrElse(freshState)
+      .getOrElse(if (commits.isEmpty) freshState else replay(commits))
     // Healed-v0 schema source: every Delta snapshot must carry metaData
     // (protocol requirement — time travel to versions before the first
     // surviving manifest fails without it), so a vacuumed v0 borrows the
@@ -258,8 +253,6 @@ final class DeltaLogMirror(
 }
 
 object DeltaLogMirror {
-  private val LogName = """(\d{20})\.json""".r
-
   /** Delta's default checkpoint cadence. */
   val CheckpointInterval = 10L
 

@@ -48,14 +48,48 @@ import org.apache.spark.sql.types._
 object DeltaTable {
   import VersionedTable.mapper
 
-  private[store] val CommitRe = """(\d{20})\.json""".r
-  private[store] val CheckpointRe = """(\d{20})\.checkpoint\.parquet""".r
-  private[store] val MultiCheckpointRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
+  private val CommitRe = """(\d{20})\.json""".r
+  private val CheckpointRe = """(\d{20})\.checkpoint\.parquet""".r
+  private val MultiCheckpointRe = """(\d{20})\.checkpoint\.(\d{10})\.(\d{10})\.parquet""".r
   // v2 checkpoints: <version>.checkpoint.<unique>.{json,parquet} manifest
   // carrying non-file actions + `sidecar` pointers into _delta_log/_sidecars/
   // (PROTOCOL.md "V2 Spec Checkpoints"). The unique part is a UUID, so the
   // two numeric groups of a multi-part classic name never match it.
-  private[store] val V2CheckpointRe = """(\d{20})\.checkpoint\.([0-9a-zA-Z-]+)\.(json|parquet)""".r
+  private val V2CheckpointRe = """(\d{20})\.checkpoint\.([0-9a-zA-Z-]+)\.(json|parquet)""".r
+
+  /** What one `_delta_log` file is: a JSON commit, a version checksum, a
+    * classic checkpoint part (a single-file checkpoint is part 1 of 1) or a
+    * v2 checkpoint manifest. */
+  private[store] sealed trait LogKind
+  private[store] case object Commit extends LogKind
+  private[store] case object Crc extends LogKind
+  private[store] final case class Classic(part: Int, of: Int) extends LogKind
+  private[store] case object V2 extends LogKind
+  private[store] final case class LogFile(st: FileStatus, version: Long, kind: LogKind)
+
+  /** The commits, checksums and checkpoints of `logDir` from one listing;
+    * anything else (`_last_checkpoint`, temp files) is skipped. */
+  private[store] def listLog(fsu: Fs, logDir: HPath): Seq[LogFile] =
+    (if (fsu.isDir(logDir)) fsu.fs.listStatus(logDir).toSeq.filter(_.isFile) else Nil)
+      .flatMap { st =>
+        (st.getPath.getName match {
+          case CommitRe(v) => Some(v -> Commit)
+          case VersionChecksum.CrcRe(v) => Some(v -> Crc)
+          case CheckpointRe(v) => Some(v -> Classic(1, 1))
+          case MultiCheckpointRe(v, part, of) => Some(v -> Classic(part.toInt, of.toInt))
+          case V2CheckpointRe(v, _, _) => Some(v -> V2)
+          case _ => None
+        }).map { case (v, kind) => LogFile(st, v.toLong, kind) }
+      }
+
+  /** The classic checkpoints of `log` whose part set is complete (a crashed
+    * multi-part write is unusable), version -> parts in order. */
+  private[store] def classicCheckpoints(log: Seq[LogFile]): Map[Long, Seq[HPath]] =
+    log.collect { case LogFile(st, v, Classic(part, of)) => (v, of, part, st.getPath) }
+      .groupBy { case (v, of, _, _) => (v, of) }.collect {
+        case ((v, of), parts) if parts.map(_._3).toSet == (1 to of).toSet =>
+          v -> parts.sortBy(_._3).map(_._4)
+      }
 
   /** Reader-relevant table features this reader actually implements.
     * (`vacuumProtocolCheck` constrains VACUUM — which
@@ -149,14 +183,8 @@ object DeltaTable {
   }
 
   /** Does `path` hold a Delta transaction log? */
-  def isDeltaTable(spark: SparkSession, path: String): Boolean = {
-    val fsu = new Fs(spark, path)
-    fsu.list(new HPath(path, "_delta_log")).map(_.getName).exists {
-      case CommitRe(_) | CheckpointRe(_) | MultiCheckpointRe(_, _, _) |
-           V2CheckpointRe(_, _, _) => true
-      case _ => false
-    }
-  }
+  def isDeltaTable(spark: SparkSession, path: String): Boolean =
+    listLog(new Fs(spark, path), new HPath(path, "_delta_log")).exists(_.kind != Crc)
 
   /** Open an external Delta table as a DataFrame, optionally as of a
     * version or a timestamp (epoch millis; resolved against commit-file
@@ -506,31 +534,18 @@ object DeltaTable {
       "specify at most one of versionAsOf / timestampAsOf")
     val fsu = new Fs(spark, path)
     val logDir = new HPath(path, "_delta_log")
-    val statuses: Seq[FileStatus] =
-      if (fsu.isDir(logDir)) fsu.fs.listStatus(logDir).toSeq.filter(_.isFile) else Nil
-    val named = statuses.map(st => st.getPath.getName -> st)
+    val log = listLog(fsu, logDir)
     val commits: Map[Long, FileStatus] =
-      named.collect { case (CommitRe(v), st) => v.toLong -> st }.toMap
+      log.collect { case LogFile(st, v, Commit) => v -> st }.toMap
     // version-checksum sidecars, already in the same listing (no extra
     // RPC): when one exists for the resolved version, the reconstructed
     // snapshot is verified against it below
-    val crcs: Map[Long, HPath] =
-      named.collect { case (VersionChecksum.CrcRe(v), st) => v.toLong -> st.getPath }.toMap
-    // classic checkpoints: single-file, or multi-part keyed by (version, numParts)
-    val singleCps: Map[Long, Seq[HPath]] =
-      named.collect { case (CheckpointRe(v), st) => v.toLong -> Seq(st.getPath) }.toMap
-    val multiCps: Map[Long, Seq[HPath]] = named.collect {
-      case (MultiCheckpointRe(v, part, of), st) => (v.toLong, of.toInt, part.toInt, st.getPath)
-    }.groupBy { case (v, of, _, _) => (v, of) }.collect {
-      // only COMPLETE part sets are usable
-      case ((v, of), parts) if parts.map(_._3).toSet == (1 to of).toSet =>
-        v -> parts.sortBy(_._3).map(_._4)
-    }
-    val checkpoints = singleCps ++ multiCps
+    val crcs: Map[Long, HPath] = log.collect { case LogFile(st, v, Crc) => v -> st.getPath }.toMap
+    val checkpoints = classicCheckpoints(log)
     // v2 checkpoints: any manifest per version is complete by spec; pick
     // the lexicographically greatest name for determinism
     val v2Cps: Map[Long, HPath] =
-      named.collect { case (V2CheckpointRe(v, _, _), st) => v.toLong -> st.getPath }
+      log.collect { case LogFile(st, v, V2) => v -> st.getPath }
         .groupBy(_._1).map { case (v, ps) => v -> ps.map(_._2).maxBy(_.getName) }
     if (commits.isEmpty && checkpoints.isEmpty && v2Cps.isEmpty)
       throw new IllegalArgumentException(s"$path is not a Delta table: no _delta_log commits")
@@ -640,8 +655,8 @@ object DeltaTable {
     *  - checkpoint-frame mode: a checkpoint lists the live adds and the
     *    unexpired tombstones side by side — under deletion vectors one
     *    path can be in both — so a `remove` is a tombstone only.
-    * `from` seeds the state (the mirror advances its last snapshot by the
-    * lines it just published). */
+    * `seed` is the state to advance (the mirror's last snapshot, advanced
+    * by the lines it just published). */
   private[store] final class Replay(seed: Option[Snapshot] = None) {
     private var schemaJson: Option[String] = None
     private var schema: Option[StructType] = seed.map(_.schema)

@@ -1815,29 +1815,15 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
       ForeignDeltaTable.retentionMillis(
         s.configuration.get("delta.logRetentionDuration"),
         defaultMs = 30L * 24 * 3600 * 1000))
-    final case class LogF(
-        st: org.apache.hadoop.fs.FileStatus, version: Long,
-        isJson: Boolean, isV2: Boolean)
-    val entries = fsu.fs.listStatus(logDir).toSeq.filter(_.isFile)
-      .flatMap { st =>
-        st.getPath.getName match {
-          case DeltaTable.CommitRe(v) => Some(LogF(st, v.toLong, isJson = true, isV2 = false))
-          case DeltaTable.V2CheckpointRe(v, _, _) =>
-            Some(LogF(st, v.toLong, isJson = false, isV2 = true))
-          case DeltaTable.CheckpointRe(v) => Some(LogF(st, v.toLong, isJson = false, isV2 = false))
-          case DeltaTable.MultiCheckpointRe(v, _, _) =>
-            Some(LogF(st, v.toLong, isJson = false, isV2 = false))
-          // crc sidecars expire with their commit (isJson: per-version
-          // files that are never a history-floor candidate)
-          case VersionChecksum.CrcRe(v) =>
-            Some(LogF(st, v.toLong, isJson = true, isV2 = false))
-          case _ => None // _last_checkpoint, temp files — not ours
-        }
-      }
-    def expired(e: LogF): Boolean = e.st.getModificationTime < cutoff
+    import DeltaTable.{Commit, Crc, LogFile, V2}
+    val entries = DeltaTable.listLog(fsu, logDir)
+    // commits and their crc sidecars expire like checkpoints but are never
+    // a history floor
+    def isCheckpoint(e: LogFile): Boolean = e.kind != Commit && e.kind != Crc
+    def expired(e: LogFile): Boolean = e.st.getModificationTime < cutoff
     // a v2 manifest's sidecar refs; None when the manifest itself is
     // unreadable (a crashed partial write — never a usable floor)
-    def sidecarRefsOf(e: LogF): Option[Seq[String]] = scala.util.Try {
+    def sidecarRefsOf(e: LogFile): Option[Seq[String]] = scala.util.Try {
       val p = e.st.getPath
       (if (p.getName.endsWith(".json")) DeltaActions.read(fsu, p)
        else DeltaTable.checkpointFrame(spark, Seq(p)))
@@ -1848,23 +1834,14 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
     // the history floor must be a USABLE checkpoint — deleting every
     // commit below an unusable one (crashed partial multipart write, v2
     // manifest with missing sidecars) would leave no way to reconstruct
-    // state at the floor. Complete ⟺ a single-part file, OR a full
-    // 1..n multipart set, OR a readable v2 manifest whose sidecars all
+    // state at the floor. Complete ⟺ a complete classic part set (a
+    // single file is one), OR a readable v2 manifest whose sidecars all
     // exist. Incomplete candidates fall back to the next older version.
-    def completeAt(v: Long): Boolean = {
-      val grp = entries.filter(x => !x.isJson && x.version == v)
-      val names = grp.map(_.st.getPath.getName)
-      val hasSingle = names.exists(n => DeltaTable.CheckpointRe.pattern.matcher(n).matches())
-      lazy val multiOk = {
-        val parts = names.collect { case DeltaTable.MultiCheckpointRe(_, k, n) => (k.toInt, n.toInt) }
-        parts.nonEmpty && parts.map(_._2).distinct.size == 1 &&
-          parts.map(_._1).toSet == (1 to parts.head._2).toSet
-      }
-      lazy val v2Ok = grp.filter(_.isV2).exists(e =>
+    val completeClassic = DeltaTable.classicCheckpoints(entries).keySet
+    def completeAt(v: Long): Boolean = completeClassic(v) ||
+      entries.exists(e => e.kind == V2 && e.version == v &&
         sidecarRefsOf(e).exists(_.forall(p => fsu.exists(resolveSidecar(p)))))
-      hasSingle || multiOk || v2Ok
-    }
-    val floorOpt = entries.filter(e => !e.isJson && expired(e)).map(_.version)
+    val floorOpt = entries.filter(e => isCheckpoint(e) && expired(e)).map(_.version)
       .distinct.sorted(Ordering[Long].reverse).find(completeAt)
     if (floorOpt.isEmpty) return Nil
     val floor = floorOpt.get
@@ -1892,8 +1869,8 @@ final class ForeignDeltaTable(spark: SparkSession, val path: String)
           "boundary checkpointing")
     }
     // sidecars: delete those referenced ONLY by doomed v2 manifests
-    def sidecarRefs(fs: Seq[LogF]): Set[String] =
-      fs.filter(_.isV2).flatMap(e => sidecarRefsOf(e).getOrElse(Nil)).toSet
+    def sidecarRefs(fs: Seq[LogFile]): Set[String] =
+      fs.filter(_.kind == V2).flatMap(e => sidecarRefsOf(e).getOrElse(Nil)).toSet
     val doomedRefs = sidecarRefs(doomed)
     val liveRefs =
       if (doomedRefs.isEmpty) Set.empty[String]
